@@ -1,8 +1,8 @@
 package graft.spark
 
-import java.io.{ByteArrayOutputStream, File, FileOutputStream}
+import java.io.ByteArrayOutputStream
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 import graft.core.columns.WriterOpts
 import graft.core.compress.CompressionKind
@@ -15,7 +15,10 @@ import graft.spark.SparkBridge._
   * encoder instance per task.
   */
 object MothSpark {
-  val BatchSize: Int = sys.env.getOrElse("GRAFT_BATCH_SIZE", "1024").toInt
+  /** Rows per encoded batch. Fixed: batch boundaries can move row-group
+    * flush points, so changing it changes output bytes.
+    */
+  val BatchSize: Int = 1024
 
   /** Footer userMetadata key carrying a VERIFIED intra-file sort order
     * ("colA,colB"). The DSv2 scan reports it as `SupportsReportOrdering`
@@ -131,20 +134,6 @@ object MothSpark {
     }
   }
 
-  /** Encode an iterator of rows into `out`; the caller owns the stream. */
-  def encodeRows(schema: StructType, rows: Iterator[Row], out: java.io.OutputStream,
-      compression: CompressionKind.Value, opts: WriterOpts): FileWriteResult = {
-    val moth = toMothStruct(schema)
-    val w = new MothFileWriter(out, moth, compression, opts)
-    val buf = new collection.mutable.ArrayBuffer[Row](BatchSize)
-    while (rows.hasNext) {
-      buf.clear()
-      while (rows.hasNext && buf.length < BatchSize) buf += rows.next()
-      w.write(rowsToVec(schema, buf))
-    }
-    w.close()
-  }
-
   /** Tungsten-native encode: consumes (reused) InternalRows straight into
     * columnar batches — the hot path for writeFiles/roundtrip. `onVec` sees
     * every built batch (used for zero-overhead first/last key tracking).
@@ -197,22 +186,13 @@ object MothSpark {
     sb.toString
   }
 
-  /** Decode a MOTH byte source to rows. */
-  def decodeRows(bytes: Array[Byte]): Iterator[Row] = {
-    val rd = MothFileReader.fromBytes(bytes)
-    val schema = toSparkSchema(rd.schema)
-    rd.batches().flatMap(v => vecToRows(schema, v))
-  }
-
   /** Distributed encode→decode identity operator: every partition round-trips
     * through the full engine in memory. The correctness oracle for the
     * driver's DuckDB compare (identity SQL).
     *
-    * Decode emits InternalRows directly (the DSv2 scan's converters) into a
-    * private[sql] internalCreateDataFrame: the previous external-Row path
-    * materialized a String/Timestamp/Row object per cell and then re-encoded
-    * every row through a RowEncoder — double conversion work on the identity
-    * hot path with no observable difference (guide §1.2 per-task work).
+    * Decode emits InternalRows directly into a private[sql]
+    * internalCreateDataFrame, so no external String/Timestamp/Row object is
+    * built per cell and no row is re-encoded through a RowEncoder.
     */
   def roundtrip(df: DataFrame,
       compression: CompressionKind.Value = CompressionKind.ZLIB,
@@ -338,7 +318,8 @@ object MothSpark {
 }
 
 /** Per-partition lineage record (north rule: input snapshot id, stripe
-  * offsets/codec choices, metrics). Hand-rolled JSON (no deps).
+  * offsets/codec choices, metrics). Written as hand-rolled JSON, read back
+  * with Jackson (on Spark's classpath).
   */
 final case class Manifest(partition: Int, snapshotId: String, rows: Long,
     rawBytes: Long, fileBytes: Long, file: String,
@@ -378,18 +359,18 @@ object Manifest {
       s""""complete":true,"stripes":$stripes}"""
   }
 
-  /** Minimal JSON field scraping — we only read back what we wrote. */
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Reads back the scalar fields [[toJson]] wrote (not the stripes). */
   def read(path: String): Manifest = {
-    val s = new String(Sources.readAllBytes(path), "UTF-8")
+    val j = mapper.readTree(Sources.readAllBytes(path))
     def longOf(k: String): Long = {
-      val m = java.util.regex.Pattern.compile("\"" + k + "\":(-?\\d+)").matcher(s)
-      require(m.find(), s"missing $k in $path")
-      m.group(1).toLong
+      val n = j.get(k)
+      require(n != null && n.isIntegralNumber, s"missing $k in $path")
+      n.asLong
     }
-    def strOf(k: String): Option[String] = {
-      val m = java.util.regex.Pattern.compile("\"" + k + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").matcher(s)
-      if (m.find()) Some(m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")) else None
-    }
+    def strOf(k: String): Option[String] =
+      Option(j.get(k)).filter(_.isTextual).map(_.asText)
     Manifest(longOf("partition").toInt, strOf("snapshotId").getOrElse(""),
       longOf("rows"), longOf("rawBytes"), longOf("fileBytes"),
       strOf("file").orNull, Nil, strOf("firstKey"), strOf("lastKey"))

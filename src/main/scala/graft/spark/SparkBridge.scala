@@ -1,13 +1,14 @@
 package graft.spark
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import graft.core.columns.{ColVec, MothType}
 import graft.core.columns.MothType._
 
-/** Spark ⇄ engine bridge: schema mapping (SURVEY.md §1.2 table) and
-  * Row batch ⇄ ColVec conversion. Runs inside mapPartitions on executors —
-  * no driver-side collection anywhere.
+/** Spark ⇄ engine schema mapping (SURVEY.md §1.2 table) and decoded
+  * ColVec → InternalRow conversion. Rows enter the engine only through
+  * [[InternalBridge.VecBuilder]]; decoded rows leave it only through
+  * [[vecToInternalRows]] (or the DSv2 scan's columnar vectors). Runs
+  * inside mapPartitions on executors — no driver-side collection anywhere.
   */
 object SparkBridge {
 
@@ -63,238 +64,6 @@ object SparkBridge {
 
   def toSparkSchema(t: TStruct): StructType =
     toSparkType(t).asInstanceOf[StructType]
-
-  // ---- Row -> ColVec ----
-
-  /** Builds the root struct vec for a batch of external Rows. */
-  def rowsToVec(schema: StructType, rows: collection.IndexedSeq[Row]): ColVec = {
-    val n = rows.length
-    val v = new ColVec(n)
-    v.children = schema.fields.zipWithIndex.map { case (f, i) =>
-      fieldToVec(f.dataType, n, j => rows(j).isNullAt(i), j => rows(j).get(i))
-    }
-    v
-  }
-
-  private def fieldToVec(dt: DataType, n: Int, isNull: Int => Boolean,
-      get: Int => Any): ColVec = {
-    val v = new ColVec(n)
-    var anyNull = false
-    val nulls = new Array[Boolean](n)
-    var i = 0
-    while (i < n) {
-      nulls(i) = isNull(i)
-      anyNull ||= nulls(i)
-      i += 1
-    }
-    if (anyNull) v.nulls = nulls
-    dt match {
-      case BooleanType =>
-        val a = new Array[Long](n)
-        var j = 0
-        while (j < n) {
-          if (!nulls(j) && get(j).asInstanceOf[Boolean]) a(j) = 1L
-          j += 1
-        }
-        v.longs = a
-      case ByteType | ShortType | IntegerType | LongType =>
-        val a = new Array[Long](n)
-        var j = 0
-        while (j < n) {
-          if (!nulls(j)) a(j) = get(j) match {
-            case x: java.lang.Long => x.longValue()
-            case x: java.lang.Integer => x.longValue()
-            case x: java.lang.Short => x.longValue()
-            case x: java.lang.Byte => x.longValue()
-          }
-          j += 1
-        }
-        v.longs = a
-      case FloatType | DoubleType =>
-        val a = new Array[Double](n)
-        var j = 0
-        while (j < n) {
-          if (!nulls(j)) a(j) = get(j) match {
-            case x: java.lang.Double => x.doubleValue()
-            case x: java.lang.Float => x.doubleValue()
-          }
-          j += 1
-        }
-        v.doubles = a
-      case StringType =>
-        val a = new Array[Array[Byte]](n)
-        var j = 0
-        while (j < n) {
-          if (!nulls(j)) a(j) = get(j).asInstanceOf[String].getBytes("UTF-8")
-          j += 1
-        }
-        v.bins = a
-      case BinaryType =>
-        val a = new Array[Array[Byte]](n)
-        var j = 0
-        while (j < n) {
-          if (!nulls(j)) a(j) = get(j).asInstanceOf[Array[Byte]]
-          j += 1
-        }
-        v.bins = a
-      case DateType =>
-        val a = new Array[Long](n)
-        var j = 0
-        while (j < n) {
-          if (!nulls(j)) a(j) = get(j) match {
-            case d: java.sql.Date => d.toLocalDate.toEpochDay
-            case d: java.time.LocalDate => d.toEpochDay
-          }
-          j += 1
-        }
-        v.longs = a
-      case _: TimeType =>
-        val a = new Array[Long](n)
-        var j = 0
-        while (j < n) {
-          if (!nulls(j)) a(j) = get(j) match {
-            case t: java.time.LocalTime => t.toNanoOfDay
-          }
-          j += 1
-        }
-        v.longs = a
-      case TimestampType | TimestampNTZType =>
-        val a = new Array[Long](n)
-        var j = 0
-        while (j < n) {
-          if (!nulls(j)) a(j) = get(j) match {
-            case t: java.sql.Timestamp =>
-              Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-            case t: java.time.Instant =>
-              t.getEpochSecond * 1000000L + t.getNano / 1000L
-            case t: java.time.LocalDateTime =>
-              val inst = t.toInstant(java.time.ZoneOffset.UTC)
-              inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-          }
-          j += 1
-        }
-        v.longs = a
-      case d: DecimalType =>
-        if (d.precision <= 18)
-          v.longs = Array.tabulate(n) { j =>
-            if (nulls(j)) 0L
-            else get(j).asInstanceOf[java.math.BigDecimal]
-              .setScale(d.scale).unscaledValue().longValueExact()
-          }
-        else
-          v.bigs = Array.tabulate(n) { j =>
-            if (nulls(j)) null
-            else BigInt(get(j).asInstanceOf[java.math.BigDecimal]
-              .setScale(d.scale).unscaledValue())
-          }
-      case a: ArrayType =>
-        val seqs = Array.tabulate(n)(j =>
-          if (nulls(j)) null else get(j).asInstanceOf[scala.collection.Seq[Any]])
-        v.lengths = Array.tabulate(n)(j => if (seqs(j) == null) 0 else seqs(j).length)
-        val flat = seqs.filter(_ != null).flatten
-        v.children = Array(fieldToVec(a.elementType, flat.length,
-          j => flat(j) == null, j => flat(j)))
-      case m: MapType =>
-        val maps = Array.tabulate(n)(j =>
-          if (nulls(j)) null else get(j).asInstanceOf[scala.collection.Map[Any, Any]].toSeq)
-        v.lengths = Array.tabulate(n)(j => if (maps(j) == null) 0 else maps(j).length)
-        val flat = maps.filter(_ != null).flatten
-        v.children = Array(
-          fieldToVec(m.keyType, flat.length, j => flat(j)._1 == null, j => flat(j)._1),
-          fieldToVec(m.valueType, flat.length, j => flat(j)._2 == null, j => flat(j)._2))
-      case s: StructType =>
-        val structs = Array.tabulate(n)(j => if (nulls(j)) null else get(j).asInstanceOf[Row])
-        val dense = structs.filter(_ != null)
-        v.children = s.fields.zipWithIndex.map { case (f, fi) =>
-          fieldToVec(f.dataType, dense.length, j => dense(j).isNullAt(fi), j => dense(j).get(fi))
-        }
-      case other => throw new IllegalArgumentException(s"unsupported $other")
-    }
-    v
-  }
-
-  // ---- ColVec -> Row ----
-
-  def vecToRows(schema: StructType, v: ColVec): Iterator[Row] = {
-    val extractors = schema.fields.zipWithIndex.map { case (f, i) =>
-      fieldExtractor(f.dataType, v.children(i))
-    }
-    (0 until v.len).iterator.map { r =>
-      Row.fromSeq(extractors.toIndexedSeq.map(_(r)))
-    }
-  }
-
-  /** Returns row-index → value function; handles dense child positioning. */
-  private def fieldExtractor(dt: DataType, v: ColVec): Int => Any = {
-    dt match {
-      case BooleanType => j => if (v.isNull(j)) null else v.longs(j) != 0
-      case ByteType => j => if (v.isNull(j)) null else v.longs(j).toByte
-      case ShortType => j => if (v.isNull(j)) null else v.longs(j).toShort
-      case IntegerType => j => if (v.isNull(j)) null else v.longs(j).toInt
-      case LongType => j => if (v.isNull(j)) null else v.longs(j)
-      case FloatType => j => if (v.isNull(j)) null else v.doubles(j).toFloat
-      case DoubleType => j => if (v.isNull(j)) null else v.doubles(j)
-      case StringType => j => if (v.isNull(j)) null else new String(v.bins(j), "UTF-8")
-      case BinaryType => j => if (v.isNull(j)) null else v.bins(j)
-      case DateType => j =>
-        if (v.isNull(j)) null else java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(v.longs(j)))
-      case TimestampType => j =>
-        if (v.isNull(j)) null
-        else {
-          val micros = v.longs(j)
-          val t = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-          t.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-          t
-        }
-      case _: TimeType => j =>
-        if (v.isNull(j)) null else java.time.LocalTime.ofNanoOfDay(v.longs(j))
-      case TimestampNTZType => j =>
-        if (v.isNull(j)) null
-        else {
-          val micros = v.longs(j)
-          java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(micros, 1000000L),
-            (Math.floorMod(micros, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
-        }
-      case d: DecimalType =>
-        if (d.precision <= 18) { j =>
-          if (v.isNull(j)) null
-          else new java.math.BigDecimal(java.math.BigInteger.valueOf(v.longs(j)), d.scale)
-        } else { j =>
-          if (v.isNull(j)) null
-          else new java.math.BigDecimal(v.bigs(j).bigInteger, d.scale)
-        }
-      case a: ArrayType =>
-        val elemEx = fieldExtractor(a.elementType, v.children(0))
-        val offsets = denseOffsets(v)
-        j => if (v.isNull(j)) null
-        else {
-          val start = offsets(j)
-          (0 until v.lengths(j)).map(k => elemEx(start + k))
-        }
-      case m: MapType =>
-        val kEx = fieldExtractor(m.keyType, v.children(0))
-        val vEx = fieldExtractor(m.valueType, v.children(1))
-        val offsets = denseOffsets(v)
-        j => if (v.isNull(j)) null
-        else {
-          val start = offsets(j)
-          (0 until v.lengths(j)).map(k => kEx(start + k) -> vEx(start + k)).toMap
-        }
-      case s: StructType =>
-        val exs = s.fields.zipWithIndex.map { case (f, fi) =>
-          fieldExtractor(f.dataType, v.children(fi))
-        }
-        val densePos = densePositions(v)
-        j => if (v.isNull(j)) null
-        else {
-          val p = densePos(j)
-          Row.fromSeq(exs.toIndexedSeq.map(_(p)))
-        }
-      case other => throw new IllegalArgumentException(s"unsupported $other")
-    }
-  }
-
-  // ---- ColVec -> InternalRow (DataSourceV2 scan path) ----
 
   /** Decoded batches straight to InternalRows: strings wrap the decoded
     * bytes as UTF8String without copy; timestamps/dates stay primitive.

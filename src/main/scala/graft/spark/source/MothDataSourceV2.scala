@@ -1217,16 +1217,15 @@ case class MothBucketedPartition(file: String, start: Long, end: Long, bucketId:
 case class MothReaderFactory(required: StructType, predicate: StatsPredicate,
     readerOpts: graft.core.file.ReaderOpts = graft.core.file.ReaderOpts())
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    HadoopConfSync.ensure()
-    val p = partition.asInstanceOf[MothSplit]
-    new MothPartitionReader(p, required, predicate, readerOpts)
-  }
-
-  // vectorized scan: hand Spark whole ColumnarBatch views over decoded
+  // vectorized scan only: hand Spark whole ColumnarBatch views over decoded
   // ColVec batches; Catalyst's codegen'd ColumnarToRow materializes rows
-  // only where the plan needs them (parquet-reader style)
+  // only where the plan needs them (parquet-reader style). Every partition
+  // is columnar, so Spark never asks for a row reader.
   override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "moth scans are columnar-only: use createColumnarReader")
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -1278,67 +1277,6 @@ class MothColumnarPartitionReader(part: MothSplit, required: StructType,
     true
   }
   override def get(): ColumnarBatch = current
-  override def close(): Unit = reader.close()
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(MothTaskMetric("mothBytesRead", reader.bytesRead))
-}
-
-class MothPartitionReader(part: MothSplit, required: StructType,
-    predicate: StatsPredicate,
-    readerOpts: graft.core.file.ReaderOpts = graft.core.file.ReaderOpts())
-    extends PartitionReader[InternalRow] {
-  private val reader = MothFileReader.fromPathCached(part.file, readerOpts)
-  private val dataSchema = StructType(required.fields.filterNot(f => MothMeta.names(f.name)))
-  private val hasMeta = dataSchema.length != required.length
-  private val fileUtf8 =
-    org.apache.spark.unsafe.types.UTF8String.fromString(part.file)
-  private val rows: Iterator[InternalRow] = reader
-    .batchesProjectedWithPos(
-      // NESTED projection: Spark's nested schema pruning hands a pruned
-      // struct tree; name-match it against the file schema so only the
-      // projected subtrees' streams are fetched and decoded
-      if (dataSchema.isEmpty)
-        graft.core.columns.MothType.TStruct(Seq(reader.schema.fields.head))
-      else SparkBridge.toMothStruct(dataSchema),
-      predicate = predicate,
-      split = Some((part.start, part.end)))
-    .flatMap { case (v, pos) =>
-      if (required.isEmpty) {
-        // COUNT(*)-style scan: only row positions matter
-        Iterator.fill(v.len)(InternalRow.empty)
-      } else if (!hasMeta) {
-        SparkBridge.vecToInternalRows(required, v)
-      } else {
-        // splice metadata values at the positions the schema asks for
-        val dataRows: Iterator[InternalRow] =
-          if (dataSchema.isEmpty) Iterator.fill(v.len)(InternalRow.empty)
-          else SparkBridge.vecToInternalRows(dataSchema, v)
-        dataRows.zipWithIndex.map { case (dr, i) =>
-          val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            required.length)
-          var di = 0
-          var oi = 0
-          while (oi < required.length) {
-            required.fields(oi).name match {
-              case MothMeta.FileCol => out.update(oi, fileUtf8)
-              case MothMeta.PosCol => out.update(oi, pos + i)
-              case _ =>
-                out.update(oi, dr.get(di, dataSchema.fields(di).dataType))
-                di += 1
-            }
-            oi += 1
-          }
-          out
-        }
-      }
-    }
-
-  private var current: InternalRow = _
-  override def next(): Boolean = {
-    if (rows.hasNext) { current = rows.next(); true } else false
-  }
-  override def get(): InternalRow = current
   override def close(): Unit = reader.close()
   override def currentMetricsValues()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =

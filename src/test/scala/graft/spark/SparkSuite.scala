@@ -585,13 +585,18 @@ class SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     // be size-reducing END TO END, not just per stream.
     val df = TranscriptGen.transcripts(spark, 60000, seed = 7)
       .orderBy("conv_id", "turn_idx")
-    val rows = df.collect()
     val schema = df.schema
-    def encode(opts: WriterOpts): (Long, Seq[org.apache.spark.sql.Row]) = {
+    val rows = df.queryExecution.toRdd.map(_.copy()).collect()
+    val source = rows.toSeq.map(_.toSeq(schema))
+    def encode(opts: WriterOpts): (Long, Seq[Seq[Any]]) = {
       val bos = new java.io.ByteArrayOutputStream()
-      MothSpark.encodeRows(schema, rows.iterator, bos, CompressionKind.ZLIB, opts)
+      MothSpark.encodeInternalRows(schema, rows.iterator, bos, CompressionKind.ZLIB, opts)
       val bytes = bos.toByteArray
-      (bytes.length.toLong, MothSpark.decodeRows(bytes).toSeq)
+      val rd = graft.core.file.MothFileReader.fromBytes(bytes)
+      val decoded = rd.batches()
+        .flatMap(v => SparkBridge.vecToInternalRows(schema, v).map(_.toSeq(schema)))
+        .toSeq
+      (bytes.length.toLong, decoded)
     }
     val (defaultBytes, defaultRows) = encode(WriterOpts())
     val (compatBytes, compatRows) = encode(
@@ -599,8 +604,8 @@ class SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(defaultBytes <= compatBytes,
       s"default file $defaultBytes B > reference-equivalent $compatBytes B")
     // both layouts decode bit-identically to the source
-    assert(defaultRows == rows.toSeq)
-    assert(compatRows == rows.toSeq)
+    assert(defaultRows == source)
+    assert(compatRows == source)
   }
 
   test("DSv2 isin/OR/IsNull pushdown: file pruning at planning + group pruning, correct results") {
@@ -1015,6 +1020,33 @@ class SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     val b = back.orderBy("conv_id", "turn_idx").collect()
     assert(a.length == b.length && a.length > 25000)
     a.zip(b).foreach { case (x, y) => assert(x == y, s"row mismatch: $x vs $y") }
+  }
+
+  test("roundtrip order contract: sorted multi-partition input comes back in input order") {
+    // queries sort BEFORE roundtrip, so emitted order must be partition index
+    // order, then row order within each partition — compared with no re-sort
+    val df = TranscriptGen.transcripts(spark, 30000, seed = 42L, partitions = 4)
+      .orderBy("conv_id", "turn_idx")
+    val back = MothSpark.roundtrip(df, CompressionKind.ZLIB)
+    assert(back.rdd.getNumPartitions >= 4, s"only ${back.rdd.getNumPartitions} partitions")
+    val a = df.collect()
+    val b = back.collect()
+    assert(a.length == b.length && a.length > 25000)
+    a.indices.foreach(i => assert(a(i) == b(i), s"row $i: ${a(i)} vs ${b(i)}"))
+  }
+
+  test("manifest round-trip: keys with tab, newline, quote, backslash and non-ASCII") {
+    val d = tmpDir()
+    val key = "conv\t1\"x\\y\né|42"
+    val withKeys = Manifest(3, s"snap\t$key", 10L, 100L, 50L, s"part\n$key.moth",
+      Nil, Some(key), Some(key + "\u0001"))
+    val empty = Manifest(4, "snap", 0L, 0L, 0L, null, Nil, None, None)
+    for (m <- Seq(withKeys, empty)) {
+      val p = Manifest.path(d, m.partition)
+      m.write(p)
+      assert(Manifest.read(p) == m)
+    }
+    assert(Manifest.readIfValid(Manifest.path(d, 3), s"snap\t$key").contains(withKeys))
   }
 
   test("encode job is deterministic: same input => byte-identical files") {
