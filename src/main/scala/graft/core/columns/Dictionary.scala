@@ -221,19 +221,16 @@ final class StringDictionaryColumnWriter(val columnId: Int, opts: WriterOpts,
   def tryConvertToDirect(maxDirectBytes: Long): Option[Long] = {
     require(direct == null)
     val w: BinaryColumnWriter = chooseDirectWriter()
-    var aborted = false
-    var gi = 0
-    while (!aborted && gi < rowGroups.length) {
+    rowGroups.foreach { rg =>
       w.beginRowGroup()
-      if (!replayInto(w, rowGroups(gi))) aborted = true
-      if (!aborted) w.finishRowGroup()
-      gi += 1
+      replayInto(w, rg)
+      w.finishRowGroup()
     }
-    if (!aborted && inRowGroup) {
+    if (inRowGroup) {
       w.beginRowGroup()
-      if (!replayInto(w, current.toArray)) aborted = true
+      replayInto(w, current.toArray)
     }
-    if (aborted || w.bufferedBytes > maxDirectBytes) None
+    if (w.bufferedBytes > maxDirectBytes) None
     else {
       direct = w
       rowGroups.clear(); current = new IntBuf()
@@ -280,7 +277,7 @@ final class StringDictionaryColumnWriter(val columnId: Int, opts: WriterOpts,
     w
   }
 
-  private def replayInto(w: BinaryColumnWriter, indices: Array[Int]): Boolean = {
+  private def replayInto(w: BinaryColumnWriter, indices: Array[Int]): Unit = {
     var i = 0
     while (i < indices.length) {
       val idx = indices(i)
@@ -288,7 +285,6 @@ final class StringDictionaryColumnWriter(val columnId: Int, opts: WriterOpts,
       else { w.appendNonNull(); w.writeValue(dict.entry(idx)) }
       i += 1
     }
-    true
   }
 
   def close(): Unit = {

@@ -106,24 +106,10 @@ object Sources {
       } finally in.close()
     }
 
-  /** All .moth files under `path` (or `path` itself if it is a file),
-    * sorted by name — one listing RPC, no recursion (the writers lay files
-    * flat, matching the reference's directory layout).
-    */
-  def listMoth(path: String): Seq[String] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val st = fs.getFileStatus(p)
-    if (st.isFile) Seq(fs.makeQualified(p).toString)
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".moth"))
-      .map(_.getPath.toString)
-      .sorted
-  }
-
-  /** Like [[listMoth]] but with (size, mtime) per file — one listing RPC:
-    * byte-based streaming admission and latestFirst ordering must not
-    * re-stat every file on every trigger.
+  /** All .moth files under `path` (or `path` itself if it is a file) with
+    * (size, mtime) each, sorted by name — one listing RPC, no recursion (the
+    * writers lay files flat, matching the reference's directory layout).
+    * The sizes and mtimes key the tail cache, so planning never re-stats.
     */
   def listMothSized(path: String): Seq[(String, Long, Long)] = {
     val p = new Path(path)

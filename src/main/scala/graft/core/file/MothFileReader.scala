@@ -273,41 +273,19 @@ final class MothFileReader(src: ByteSource, opts: ReaderOpts = ReaderOpts(),
   /** IO bytes fetched so far (tail + stripes). */
   def bytesRead: Long = src.bytesRead
 
-  val (postScript, footer, stripeStatsPerStripe) = {
-    val t = if (preParsed != null) preParsed else parseTail(src)
-    (t.postScript, t.footer, t.stripeStats)
-  }
+  /** The parsed tail: the given one, else parsed from `src`. */
+  val tail: ParsedTail = if (preParsed != null) preParsed else parseTail(src)
+  def postScript: Meta.PostScriptMsg = tail.postScript
+  def footer: Meta.FooterMsg = tail.footer
 
   val compression: CompressionKind.Value = CompressionKind(postScript.compression)
-  val schema: MothType.TStruct = Meta.unflattenTypes(footer.types) match {
-    case s: MothType.TStruct => s
-    case other => MothType.TStruct(Seq(("value", other)))
-  }
+  def schema: MothType.TStruct = tail.schema
   def rowCount: Long = footer.numberOfRows
   def fileStats: Seq[ColStats] = footer.statistics
-  def userMetadata: Map[String, String] =
-    footer.userMetadata.map { case (k, v) => k -> new String(v, "UTF-8") }
-
-  /** Engine writer version recorded in the footer (1 when absent). Version 2
-    * is the first whose double stats are NaN-sound (DoubleStatsBuilder drops
-    * min/max on NaN); double-range pruning is only applied at >= 2.
-    */
-  lazy val writerVersion: Int =
-    userMetadata.get("graft.writer.version").flatMap(_.toIntOption).getOrElse(1)
-  /** Whether stats-based pruning may trust this file's double min/max. */
-  def trustDoubleStats: Boolean = writerVersion >= 2
-
-  /** Column ids of a top-level field subtree, for projection. */
-  private lazy val fieldColumnRanges: Seq[(String, Range)] = {
-    var next = 1
-    schema.fields.map { case (name, t) =>
-      val start = next
-      next += MothType.columnCount(t)
-      (name, start until next)
-    }
-  }
-
-  def columnIdOf(name: String): Option[Int] = fieldColumnRanges.find(_._1 == name).map(_._2.start)
+  def userMetadata: Map[String, String] = tail.userMetadata
+  def writerVersion: Int = tail.writerVersion
+  def trustDoubleStats: Boolean = tail.trustDoubleStats
+  def columnIdOf(name: String): Option[Int] = tail.columnIdOf(name)
 
   /** Iterate ColVec batches over the projected top-level fields.
     * @param includedFields None = all fields
@@ -346,10 +324,7 @@ final class MothFileReader(src: ByteSource, opts: ReaderOpts = ReaderOpts(),
       split: Option[(Long, Long)] = None): Iterator[(ColVec, Long)] = {
     val includedIds = MothFileReader.projectedIds(schema, projected, 0)
 
-    // file-level stats gate
-    if (!predicate.matches(columnIdOf, c => footer.statistics.lift(c), _ => None,
-        trustDoubleStats))
-      return Iterator.empty
+    if (!tail.mayMatch(predicate)) return Iterator.empty
 
     // file row ordinal of each stripe's first row
     val stripeStartRows = footer.stripes.scanLeft(0L)(_ + _.numberOfRows)
@@ -357,7 +332,7 @@ final class MothFileReader(src: ByteSource, opts: ReaderOpts = ReaderOpts(),
     footer.stripes.iterator.zipWithIndex.flatMap { case (stripe, si) =>
       val owned = split.forall { case (s, e) => stripe.offset >= s && stripe.offset < e }
       val stripeOk = owned && predicate.matches(columnIdOf,
-        c => stripeStatsPerStripe.lift(si).flatMap(_.lift(c)), _ => None,
+        c => tail.stripeStats.lift(si).flatMap(_.lift(c)), _ => None,
         trustDoubleStats)
       if (!stripeOk) Iterator.empty
       else readStripe(stripe, projected, includedIds, predicate, batchSize,
@@ -447,7 +422,7 @@ final class MothFileReader(src: ByteSource, opts: ReaderOpts = ReaderOpts(),
     val canSeek = includedIds.forall(c =>
       perColEntries.get(c).exists(_.lengthCompare(nGroups) >= 0))
 
-    val reader = buildProjectedReader(projected, includedIds)
+    val reader = MothFileReader.projectedReader(schema, projected, 0)
     reader.startStripe(streams)
 
     new Iterator[(ColVec, Long)] {
@@ -500,18 +475,50 @@ final class MothFileReader(src: ByteSource, opts: ReaderOpts = ReaderOpts(),
     }
   }
 
-  /** Reader tree over the projected (possibly nested) fields but with
-    * ORIGINAL column ids, children in PROJECTED field order.
-    */
-  private def buildProjectedReader(projected: MothType.TStruct,
-      includedIds: Set[Int]): ColumnReader =
-    MothFileReader.projectedReader(schema, projected, 0)
-
   def close(): Unit = src.close()
 }
 
+/** A file's parsed tail (postscript, footer, per-stripe stats) and the
+  * facts derived from it. Immutable and shared through the per-JVM tail
+  * cache, so the derived values are computed once per file.
+  */
 final case class ParsedTail(postScript: Meta.PostScriptMsg, footer: Meta.FooterMsg,
-    stripeStats: Seq[Seq[ColStats]])
+    stripeStats: Seq[Seq[ColStats]]) {
+  lazy val schema: MothType.TStruct = Meta.unflattenTypes(footer.types) match {
+    case s: MothType.TStruct => s
+    case other => MothType.TStruct(Seq(("value", other)))
+  }
+
+  lazy val userMetadata: Map[String, String] =
+    footer.userMetadata.map { case (k, v) => k -> new String(v, "UTF-8") }
+
+  /** Engine writer version recorded in the footer (1 when absent). Version 2
+    * is the first whose double stats are NaN-sound (DoubleStatsBuilder drops
+    * min/max on NaN); double-range pruning is only applied at >= 2.
+    */
+  lazy val writerVersion: Int =
+    userMetadata.get("graft.writer.version").flatMap(_.toIntOption).getOrElse(1)
+  /** Whether stats-based pruning may trust this file's double min/max. */
+  def trustDoubleStats: Boolean = writerVersion >= 2
+
+  /** Column ids of a top-level field subtree, for projection. */
+  private lazy val fieldColumnRanges: Seq[(String, Range)] = {
+    var next = 1
+    schema.fields.map { case (name, t) =>
+      val start = next
+      next += MothType.columnCount(t)
+      (name, start until next)
+    }
+  }
+
+  def columnIdOf(name: String): Option[Int] = fieldColumnRanges.find(_._1 == name).map(_._2.start)
+
+  /** File-level stats gate: false only when the footer statistics refute
+    * the predicate, so the whole file can be skipped.
+    */
+  def mayMatch(predicate: StatsPredicate): Boolean =
+    predicate.matches(columnIdOf, footer.statistics.lift, _ => None, trustDoubleStats)
+}
 
 object MothFileReader {
   def fromBytes(bytes: Array[Byte], opts: ReaderOpts = ReaderOpts()): MothFileReader =
@@ -520,15 +527,27 @@ object MothFileReader {
   def fromPath(path: String, opts: ReaderOpts = ReaderOpts()): MothFileReader =
     new MothFileReader(Sources.forPath(path), opts)
 
+  /** Parse the tail. Every length is bounds-checked against the file, so a
+    * truncated or corrupt tail fails with an IOException instead of an
+    * index error deep in the parser.
+    */
   def parseTail(src: ByteSource): ParsedTail = {
-    val tailLen = math.min(src.size, 16384L).toInt
-    var tail = src.read(src.size - tailLen, tailLen)
+    def corrupt(msg: String): Nothing = throw new java.io.IOException(s"corrupt moth tail: $msg")
+    val size = src.size
+    if (size < 2) corrupt(s"file of $size bytes has no postscript")
+    val tailLen = math.min(size, 16384L).toInt
+    var tail = src.read(size - tailLen, tailLen)
     val psLen = tail(tail.length - 1) & 0xff
+    if (psLen == 0 || psLen + 1 > tail.length)
+      corrupt(s"postscript length $psLen does not fit a $size-byte file")
     val ps = Meta.readPostScript(tail, tail.length - 1 - psLen, psLen)
-    require(ps.magic == "MOTH", s"bad magic '${ps.magic}'")
+    if (ps.magic != "MOTH") corrupt(s"bad magic '${ps.magic}'")
     val kind = CompressionKind(ps.compression)
-    val need = (ps.footerLength + ps.metadataLength + psLen + 1).toInt
-    if (need > tail.length) tail = src.read(src.size - need, need)
+    val need = ps.footerLength + ps.metadataLength + psLen + 1
+    if (ps.footerLength < 0 || ps.metadataLength < 0 || need > math.min(size, Int.MaxValue))
+      corrupt(s"footer ${ps.footerLength} + metadata ${ps.metadataLength} bytes " +
+        s"exceed the $size-byte file")
+    if (need > tail.length) tail = src.read(size - need, need.toInt)
     val footerStart = tail.length - 1 - psLen - ps.footerLength.toInt
     val footerBytes = Chunked.decompress(kind, tail, footerStart, ps.footerLength.toInt,
       ps.compressionBlockSize.toInt)
@@ -544,6 +563,12 @@ object MothFileReader {
     * a DSv2 query otherwise re-reads and re-parses each file tail for
     * schema inference, split planning, statistics and every partition
     * reader. Thread-safe; bounded at 1024 entries (tails are a few KB).
+    *
+    * ASSUMES IMMUTABLE FILES: an in-place overwrite that preserves length
+    * within filesystem mtime granularity would serve a stale footer. The
+    * engine's own writers never do this (output is always a fresh name
+    * renamed into place); foreign writers mutating .moth files in place are
+    * unsupported.
     */
   private val tailCache =
     new java.util.LinkedHashMap[String, ParsedTail](64, 0.75f, true) {
@@ -551,25 +576,47 @@ object MothFileReader {
           e: java.util.Map.Entry[String, ParsedTail]): Boolean = size() > 1024
     }
 
-  /** Open a file reader, serving the tail parse from the cache.
-    *
-    * ASSUMES IMMUTABLE FILES: the cache key is (path, size, mtime), so an
-    * in-place overwrite that preserves length within filesystem mtime
-    * granularity would serve a stale footer. The engine's own writers never
-    * do this (output is always a fresh name renamed into place); foreign
-    * writers mutating .moth files in place are unsupported.
+  private def keyOf(path: String, size: Long, mtime: Long): String = s"$path:$size:$mtime"
+
+  private def cachedTail(key: String): Option[ParsedTail] =
+    tailCache.synchronized(Option(tailCache.get(key)))
+
+  /** The one place a named file's tail is parsed and cached: a tail that
+    * does not parse fails with an IOException naming the file.
+    */
+  private def loadTail(path: String, key: String, src: ByteSource): ParsedTail = {
+    val parsed =
+      try parseTail(src)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          throw new java.io.IOException(s"cannot read the tail of moth file $path: $e", e)
+      }
+    tailCache.synchronized(tailCache.put(key, parsed))
+    parsed
+  }
+
+  /** The tail of `path` as of the (size, mtime) a directory listing
+    * returned: a cache hit opens no file.
+    */
+  def tailOf(path: String, size: Long, mtime: Long): ParsedTail = {
+    val key = keyOf(path, size, mtime)
+    cachedTail(key).getOrElse {
+      val src = Sources.forPath(path)
+      try loadTail(path, key, src) finally src.close()
+    }
+  }
+
+  /** Open a file reader, serving the tail from the cache; on a miss the
+    * tail is parsed through the reader's own source (no second open).
     */
   def fromPathCached(path: String, opts: ReaderOpts = ReaderOpts()): MothFileReader = {
-    val (len, mtime) = Sources.status(path)
-    val key = s"$path:$len:$mtime"
-    val cached = tailCache.synchronized(tailCache.get(key))
-    if (cached != null) new MothFileReader(Sources.forPath(path), opts, cached)
-    else {
-      val rd = new MothFileReader(Sources.forPath(path), opts)
-      val parsed = ParsedTail(rd.postScript, rd.footer, rd.stripeStatsPerStripe)
-      tailCache.synchronized(tailCache.put(key, parsed))
-      rd
-    }
+    val (size, mtime) = Sources.status(path)
+    val key = keyOf(path, size, mtime)
+    val src = Sources.forPath(path)
+    val tail =
+      try cachedTail(key).getOrElse(loadTail(path, key, src))
+      catch { case e: Throwable => src.close(); throw e }
+    new MothFileReader(src, opts, tail)
   }
 
   /** Column ids covered by a nested projection: struct levels keep only the

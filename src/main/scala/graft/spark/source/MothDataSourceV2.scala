@@ -12,7 +12,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.catalyst.InternalRow
 import graft.core.columns.WriterOpts
 import graft.core.compress.CompressionKind
-import graft.core.file.{AndPred, DecimalRangePred, DoubleRangePred, IsNotNullPred, IsNullPred, LongEqPred, LongInPred, LongRangePred, MothFileReader, MothFileWriter, OrPred, StatsPredicate, StringEqPred, StringInPred, StringRangePred}
+import graft.core.file.{AndPred, DecimalRangePred, DoubleRangePred, IsNotNullPred, IsNullPred, LongEqPred, LongInPred, LongRangePred, MothFileReader, MothFileWriter, OrPred, ParsedTail, StatsPredicate, StringEqPred, StringInPred, StringRangePred}
 import graft.spark.{InternalBridge, SparkBridge}
 
 /** Merges the Spark session/executor `spark.hadoop.*` settings into the
@@ -50,12 +50,14 @@ object HadoopConfSync {
   *    pruning (MothPredicate.go semantics). Pruning is CONSERVATIVE, so
   *    every filter is also returned as a residual for Spark to re-apply —
   *    exactly how ORC SearchArguments behave.
-  *  - one input partition per file (files are written partition-sized by
-  *    EncodeJob; on a real cluster large files would additionally split by
-  *    stripe ranges — the reader already takes a [start,end) split and
-  *    assigns stripes by first byte, MothRecordReader.go splitContainsStripe)
+  *  - one input partition per ~128MB of stripes (`maxPartitionBytes`):
+  *    small files stay whole, large files split by stripe ranges, a stripe
+  *    belonging to the split that owns its first byte
+  *    (MothRecordReader.go splitContainsStripe)
   *  - statistics reporting from footers so Catalyst can size joins
   *    (broadcast decisions) without scanning.
+  *  - one directory listing per scan ([[MothFileSet]]): every planning
+  *    decision reads the same files and their cached tails.
   */
 class MothDataSourceV2 extends TableProvider with DataSourceRegister {
   override def shortName(): String = "moth"
@@ -78,13 +80,31 @@ class MothDataSourceV2 extends TableProvider with DataSourceRegister {
   override def supportsExternalMetadata(): Boolean = true
 }
 
+/** One file of a table listing: its path and parsed tail. */
+final case class MothFile(path: String, tail: ParsedTail)
+
+/** The files one scan sees: ONE listing of the table directory, each file
+  * with its parsed tail, taken on first use and then read by every
+  * planning decision of the scan (pushdowns, reported order and
+  * partitioning, split planning, statistics). Within one query execution a
+  * scan therefore sees the files listed when its builder was created, as
+  * Spark's own file sources do; the next action re-lists. A streaming scan
+  * never touches it, so a stream may start over an empty directory.
+  */
+final class MothFileSet(path: String) {
+  lazy val files: IndexedSeq[MothFile] = MothTable.listing(path)
+  lazy val sortTag: Option[Seq[String]] = MothTable.commonSortTag(files)
+  lazy val bucketLayout: Option[MothTable.BucketLayout] = MothTable.bucketLayout(files)
+}
+
 object MothTable {
   /** List via Hadoop FileSystem: any registered scheme (hdfs://, s3a://,
     * file:, scheme-less local) — the storage-agnostic face of the table.
+    * Each entry is (path, size, mtime).
     */
-  def listFiles(path: String): Seq[String] = {
+  def listFiles(path: String): Seq[(String, Long, Long)] = {
     HadoopConfSync.ensure()
-    val files = graft.core.file.Sources.listMoth(path)
+    val files = graft.core.file.Sources.listMothSized(path)
     require(files.nonEmpty, s"no .moth files at $path")
     files
   }
@@ -93,57 +113,40 @@ object MothTable {
     * failure (malformed URI, auth, throttling) propagates — callers that
     * treat "empty" as a soft case must not silently swallow real errors.
     */
-  def listMothOrEmpty(path: String): Seq[String] = {
+  def listMothOrEmpty(path: String): Seq[(String, Long, Long)] = {
     HadoopConfSync.ensure()
-    try graft.core.file.Sources.listMoth(path)
+    try graft.core.file.Sources.listMothSized(path)
     catch { case _: java.io.FileNotFoundException => Nil }
   }
 
-  def schemaOf(files: Seq[String]): StructType = {
-    val rd = MothFileReader.fromPathCached(files.head)
-    try SparkBridge.toSparkSchema(rd.schema)
-    finally rd.close()
+  /** One listing of `path` with every file's tail. Tails come from the
+    * per-JVM cache keyed by the listed (size, mtime), so a warm table opens
+    * no file; cold tails are read in parallel (planning a 100k-file table
+    * must not serialize a footer wave).
+    */
+  def listing(path: String): IndexedSeq[MothFile] = {
+    import scala.collection.parallel.CollectionConverters._
+    val par = listFiles(path).toIndexedSeq.par
+    par.tasksupport = new scala.collection.parallel.ExecutionContextTaskSupport(
+      scala.concurrent.ExecutionContext.global)
+    par.map { case (f, size, mtime) => MothFile(f, MothFileReader.tailOf(f, size, mtime)) }
+      .toIndexedSeq
   }
 
-  /** The sort tag all files agree on, if any (columns of
-    * [[graft.spark.MothSpark.SortedByKey]]). Cheap negative probe: the
-    * first cached tail decides; agreement is verified across all files IN
-    * PARALLEL (planning of a 100k-file table must not serialize a footer
-    * wave on the driver), and memoized per (path, file listing) so
-    * pushTopN and outputOrdering within one query — and repeated queries
-    * over an unchanged table — share one probe. Moth files are immutable
-    * (see the tail-cache contract), so the name listing keys the result.
-    */
-  private val sortTagCache =
-    new java.util.LinkedHashMap[String, (Seq[String], Option[Seq[String]])](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Seq[String], Option[Seq[String]])]): Boolean =
-        size() > 256
-    }
+  /** Spark schema of the first listed file. */
+  def schemaOf(files: Seq[(String, Long, Long)]): StructType = {
+    val (f, size, mtime) = files.head
+    SparkBridge.toSparkSchema(MothFileReader.tailOf(f, size, mtime).schema)
+  }
 
-  def commonSortTag(path: String): Option[Seq[String]] = {
-    val files = listFiles(path)
-    sortTagCache.synchronized(Option(sortTagCache.get(path))) match {
-      case Some((cachedFiles, tag)) if cachedFiles == files => tag
-      case _ =>
-        def tag(f: String): Option[Seq[String]] = {
-          val rd = MothFileReader.fromPathCached(f)
-          try rd.userMetadata.get(graft.spark.MothSpark.SortedByKey)
-            .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-          finally rd.close()
-        }
-        val result = tag(files.head).filter { cols =>
-          cols.nonEmpty && {
-            import scala.collection.parallel.CollectionConverters._
-            val par = files.tail.par
-            par.tasksupport = new scala.collection.parallel.ExecutionContextTaskSupport(
-              scala.concurrent.ExecutionContext.global)
-            par.forall(f => tag(f).contains(cols))
-          }
-        }
-        sortTagCache.synchronized(sortTagCache.put(path, (files, result)))
-        result
-    }
+  private def tagCols(v: String): Seq[String] = v.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
+
+  /** The sort tag all files agree on, if any (columns of
+    * [[graft.spark.MothSpark.SortedByKey]]).
+    */
+  def commonSortTag(files: Seq[MothFile]): Option[Seq[String]] = {
+    def tag(f: MothFile) = f.tail.userMetadata.get(graft.spark.MothSpark.SortedByKey).map(tagCols)
+    tag(files.head).filter(cols => cols.nonEmpty && files.forall(tag(_).contains(cols)))
   }
 
   /** Verified bucket layout of a table: every file carries the SAME
@@ -153,57 +156,26 @@ object MothTable {
     def distinctIds: Int = idOf.values.toSet.size
   }
 
-  /** Memoized parallel probe for the table's bucket layout (same listing
-    * key + immutability contract as [[commonSortTag]]). One untagged or
-    * disagreeing file disables it — the table then joins with a shuffle.
+  /** The table's bucket layout. One untagged or disagreeing file disables
+    * it — the table then joins with a shuffle.
     */
-  private val bucketCache =
-    new java.util.LinkedHashMap[String, (Seq[String], Option[BucketLayout])](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Seq[String], Option[BucketLayout])]): Boolean =
-        size() > 256
+  def bucketLayout(files: Seq[MothFile]): Option[BucketLayout] = {
+    val probed = files.map { f =>
+      val m = f.tail.userMetadata
+      for {
+        cols <- m.get(MothBucket.ColsKey)
+        n <- m.get(MothBucket.CountKey).flatMap(_.toIntOption)
+        id <- m.get(MothBucket.IdKey).flatMap(_.toIntOption)
+      } yield (f.path, cols, n, id)
     }
-
-  def bucketLayout(path: String): Option[BucketLayout] = {
-    val files = listFiles(path)
-    bucketCache.synchronized(Option(bucketCache.get(path))) match {
-      case Some((cachedFiles, layout)) if cachedFiles == files => layout
-      case _ =>
-        val probed = parFiles(path).map { f =>
-          val rd = MothFileReader.fromPathCached(f)
-          try {
-            val m = rd.userMetadata
-            for {
-              cols <- m.get(MothBucket.ColsKey)
-              n <- m.get(MothBucket.CountKey).flatMap(_.toIntOption)
-              id <- m.get(MothBucket.IdKey).flatMap(_.toIntOption)
-            } yield (f, cols, n, id)
-          } finally rd.close()
-        }.seq
-        val layout =
-          if (probed.exists(_.isEmpty)) None
-          else {
-            val ps = probed.map(_.get)
-            val (c0, n0) = (ps.head._2, ps.head._3)
-            if (n0 > 0 && ps.forall(p => p._2 == c0 && p._3 == n0))
-              Some(BucketLayout(c0.split(",").toSeq.map(_.trim).filter(_.nonEmpty),
-                n0, ps.map(p => p._1 -> p._4).toMap))
-            else None
-          }
-        bucketCache.synchronized(bucketCache.put(path, (files, layout)))
-        layout
+    if (probed.exists(_.isEmpty)) None
+    else {
+      val ps = probed.map(_.get)
+      val (c0, n0) = (ps.head._2, ps.head._3)
+      if (n0 > 0 && ps.forall(p => p._2 == c0 && p._3 == n0))
+        Some(BucketLayout(tagCols(c0), n0, ps.map(p => p._1 -> p._4).toMap))
+      else None
     }
-  }
-
-  /** Driver-side per-file planning parallelism: footer reads are IO-bound
-    * and independent — a 100k-file table must not plan serially.
-    */
-  def parFiles(path: String): scala.collection.parallel.ParSeq[String] = {
-    import scala.collection.parallel.CollectionConverters._
-    val par = listFiles(path).par
-    par.tasksupport = new scala.collection.parallel.ExecutionContextTaskSupport(
-      scala.concurrent.ExecutionContext.global)
-    par
   }
 }
 
@@ -347,7 +319,7 @@ class MothWrite(path: String, schema: StructType, queryId: String,
     if (truncate) {
       val keep = messages.collect { case MothCommit(f) => f }.toSet
       val fs = Sources.fileSystemOf(path)
-      MothTable.listMothOrEmpty(path).foreach { f =>
+      MothTable.listMothOrEmpty(path).foreach { case (f, _, _) =>
         val p = new Path(f)
         if (!keep.contains(p.getName)) fs.delete(p, false)
       }
@@ -467,6 +439,7 @@ class MothScanBuilder(path: String, fullSchema: StructType,
     with SupportsPushDownAggregates with SupportsPushDownLimit
     with SupportsPushDownTopN {
 
+  private val fileSet = new MothFileSet(path)
   private var required: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
   private var aggPush: Option[(StructType, Array[Long])] = None
@@ -504,7 +477,7 @@ class MothScanBuilder(path: String, fullSchema: StructType,
       n: Int): Boolean = {
     import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection}
     if (pushed.nonEmpty || orders.isEmpty) return false
-    val ok = MothTable.commonSortTag(path).exists { cols =>
+    val ok = fileSet.sortTag.exists { cols =>
       orders.length <= cols.length && orders.zip(cols).forall { case (o, c) =>
         o.expression match {
           case nr: NamedReference =>
@@ -594,65 +567,55 @@ class MothScanBuilder(path: String, fullSchema: StructType,
       }
     if (reqs.exists(_.isEmpty)) return None
 
-    // fold footers (tails are cached per JVM); bail if any file lacks exact
-    // stats for a requested column
-    val perFile = MothTable.parFiles(path).map { f =>
-      val rd = MothFileReader.fromPathCached(f)
-      try {
-        val hasVals = reqs.map(_.get._1).map { req =>
-          val colName = req match {
-            case CountCol(n) => Some(n)
-            case MinMax(n, _, _) => Some(n)
-            case SumCol(n) => Some(n)
-            case CountAll => None
-          }
-          colName match {
-            case Some(n) =>
-              rd.columnIdOf(n).flatMap(rd.fileStats.lift).exists(_.numValues > 0)
-            case None => rd.rowCount > 0
-          }
-        }
-        val vals = reqs.map(_.get._1).map {
-          case CountAll => Some(rd.rowCount)
-          case CountCol(n) =>
-            rd.columnIdOf(n).flatMap(rd.fileStats.lift).map(_.numValues)
-          case MinMax(n, dt, isMin) =>
-            rd.columnIdOf(n).flatMap(rd.fileStats.lift).flatMap { s =>
-              if (s.numValues == 0) None // all-null file: no bound to offer
-              else dt match {
-                case DateType => s.dateStats.map(d => (if (isMin) d._1 else d._2).toLong)
-                case _ => s.intStats.map(i => if (isMin) i.min else i.max)
-              }
+    // fold footers; bail if any file lacks exact stats for a requested column
+    val perFile = fileSet.files.map { f =>
+      val t = f.tail
+      def statsOf(n: String) = t.columnIdOf(n).flatMap(t.footer.statistics.lift)
+      val hasVals = reqs.map(_.get._1).map {
+        case CountCol(n) => statsOf(n).exists(_.numValues > 0)
+        case MinMax(n, _, _) => statsOf(n).exists(_.numValues > 0)
+        case SumCol(n) => statsOf(n).exists(_.numValues > 0)
+        case CountAll => t.footer.numberOfRows > 0
+      }
+      val vals = reqs.map(_.get._1).map {
+        case CountAll => Some(t.footer.numberOfRows)
+        case CountCol(n) => statsOf(n).map(_.numValues)
+        case MinMax(n, dt, isMin) =>
+          statsOf(n).flatMap { s =>
+            if (s.numValues == 0) None // all-null file: no bound to offer
+            else dt match {
+              case DateType => s.dateStats.map(d => (if (isMin) d._1 else d._2).toLong)
+              case _ => s.intStats.map(i => if (isMin) i.min else i.max)
             }
-          case SumCol(n) =>
-            rd.columnIdOf(n).flatMap(rd.fileStats.lift).flatMap { s =>
-              if (s.numValues == 0) Some(0L) // all-null file adds nothing
-              else s.intStats.flatMap(_.sum) // None = overflow → bail
-            }
-        }
-        (rd.rowCount, vals, hasVals)
-      } finally rd.close()
-    }.seq
+          }
+        case SumCol(n) =>
+          statsOf(n).flatMap { s =>
+            if (s.numValues == 0) Some(0L) // all-null file adds nothing
+            else s.intStats.flatMap(_.sum) // None = overflow → bail
+          }
+      }
+      (vals, hasVals)
+    }
 
     val out = new Array[Long](reqs.length)
     reqs.map(_.get._1).zipWithIndex.foreach { case (req, i) =>
       req match {
         case CountAll | _: CountCol =>
-          val vs = perFile.map(_._2(i))
+          val vs = perFile.map(_._1(i))
           if (vs.exists(_.isEmpty)) return None
           out(i) = vs.map(_.get).sum
         case MinMax(_, _, isMin) =>
           // an all-null FILE contributes no bound and is fine to skip (nulls
           // never win min/max); a column null in EVERY file would need a
           // NULL result — leave that case to the normal scan
-          val vs = perFile.flatMap(_._2(i))
+          val vs = perFile.flatMap(_._1(i))
           if (vs.isEmpty) return None
           out(i) = if (isMin) vs.min else vs.max
         case SumCol(_) =>
-          val vs = perFile.map(_._2(i))
+          val vs = perFile.map(_._1(i))
           if (vs.exists(_.isEmpty)) return None // overflow somewhere: real scan
           // SUM over zero non-null values is NULL in SQL — normal scan
-          if (!perFile.exists(_._3(i))) return None
+          if (!perFile.exists(_._2(i))) return None
           var acc = 0L
           vs.flatten.foreach { v =>
             val next = acc + v
@@ -685,7 +648,7 @@ class MothScanBuilder(path: String, fullSchema: StructType,
   override def build(): Scan = aggPush match {
     case Some((schema, values)) => new MothAggScan(path, schema, values)
     case None =>
-      new MothScan(path, required,
+      new MothScan(path, fileSet, required,
         StatsPredicate(pushed.flatMap(f => MothFilters.toPreds(fullSchema, f)).toSeq),
         maxPartitionBytes, streamOpts, readerOpts,
         limit = if (pushed.isEmpty) limit else None,
@@ -940,7 +903,8 @@ object MothFilters {
     if (ps.size == 1) ps.head else AndPred(ps)
 }
 
-class MothScan(path: String, required: StructType, predicate: StatsPredicate,
+class MothScan(path: String, fileSet: MothFileSet, required: StructType,
+    predicate: StatsPredicate,
     maxPartitionBytes: Long = 128L << 20,
     streamOpts: MothStreamOpts = MothStreamOpts(),
     readerOpts: graft.core.file.ReaderOpts = graft.core.file.ReaderOpts(),
@@ -956,8 +920,7 @@ class MothScan(path: String, required: StructType, predicate: StatsPredicate,
     * partitioning whose references left the output).
     */
   private lazy val bucketing: Option[MothTable.BucketLayout] =
-    MothTable.bucketLayout(path).filter(
-      _.cols.forall(c => required.fieldNames.contains(c)))
+    fileSet.bucketLayout.filter(_.cols.forall(c => required.fieldNames.contains(c)))
 
   /** Storage-partitioned joins: the scan reports its files' VERIFIED
     * bucket layout as a KeyGroupedPartitioning over `bucket(n, cols)`.
@@ -982,23 +945,12 @@ class MothScan(path: String, required: StructType, predicate: StatsPredicate,
     }
 
   /** Split constructor: bucket-tagged tables emit key-carrying splits so
-    * Spark can group them per bucket.
-    *
-    * The bucket layout was probed from an earlier directory listing than
-    * the one planInputPartitions iterates; a file appended between the two
-    * (append-mode writes are supported) is absent from `idOf`. On a miss,
-    * re-probe the layout from a fresh listing (the memo keys on the
-    * listing, so the stale entry is replaced) and read the late file's own
-    * verified tag — never throw planning-time on a race the writer allows.
+    * Spark can group them per bucket. The layout and the planned files
+    * come from the same file set, so every planned file has its id.
     */
   private def mkSplit(f: String, s: Long, e: Long): InputPartition =
     bucketing match {
-      case Some(bl) =>
-        val id = bl.idOf.get(f)
-          .orElse(MothTable.bucketLayout(path).flatMap(_.idOf.get(f)))
-          .getOrElse(throw new IllegalStateException(
-            s"file $f appeared without a matching bucket tag in bucketed table $path"))
-        MothBucketedPartition(f, s, e, id)
+      case Some(bl) => MothBucketedPartition(f, s, e, bl.idOf(f))
       case None => MothInputPartition(f, s, e)
     }
 
@@ -1008,14 +960,12 @@ class MothScan(path: String, required: StructType, predicate: StatsPredicate,
     * Reported only when EVERY file carries the identical tag, projected to
     * the longest prefix of sort columns present in the read schema. Spark
     * then elides per-partition sorts (sortWithinPartitions, SMJ sides)
-    * over data the encode pipeline already ordered. Cheap: the negative
-    * probe reads ONE cached tail; the positive path reads tails the
-    * planner is about to read anyway.
+    * over data the encode pipeline already ordered.
     */
   private lazy val reportedOrdering
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
     import org.apache.spark.sql.connector.expressions.{Expressions, NullOrdering, SortDirection}
-    MothTable.commonSortTag(path) match {
+    fileSet.sortTag match {
       case Some(cols) =>
         cols.takeWhile(c => required.fieldNames.contains(c))
           .map(c => Expressions.sort(Expressions.column(c),
@@ -1056,112 +1006,88 @@ class MothScan(path: String, required: StructType, predicate: StatsPredicate,
   override def filter(filters: Array[Filter]): Unit =
     runtimePreds = filters.toSeq.flatMap(f => MothFilters.toPreds(required, f))
 
-  /** One partition per ~128MB of stripes: large files split by stripe
-    * ranges (a stripe belongs to the split owning its first byte —
-    * MothRecordReader.go splitContainsStripe), small files stay whole.
-    * At 100TB this is what fans a few thousand files out to every core.
+  private def stripeLen(s: graft.core.file.Meta.StripeInfo): Long =
+    s.indexLength + s.dataLength + s.footerLength
+
+  /** One split per leading stripe of `f`, in file order, until the
+    * stripes' footer row counts cover n (a stripeless file is one whole
+    * split); also returns the rows covered.
     */
-  /** Limit probes: plan one split per stripe, in file order, until the
-    * stripes' footer row counts cover n — a `limit(10)` on a 100k-file
-    * table launches one task over one stripe instead of a full wave. Only
-    * valid with no predicate (a filter makes row counts non-authoritative;
-    * the builder never pushes a limit alongside filters, and a runtime
-    * filter arriving later disables the capped plan too).
+  private def leadingSplits(f: MothFile, n: Long): (Seq[InputPartition], Long) = {
+    val stripes = f.tail.footer.stripes
+    if (stripes.isEmpty) (Seq(mkSplit(f.path, 0L, Long.MaxValue)), f.tail.footer.numberOfRows)
+    else {
+      val taken = stripes.zip(stripes.scanLeft(0L)(_ + _.numberOfRows))
+        .takeWhile(_._2 < n).map(_._1)
+      (taken.map(s => mkSplit(f.path, s.offset, s.offset + stripeLen(s))),
+        taken.map(_.numberOfRows).sum)
+    }
+  }
+
+  /** Limit probes: leading stripes across files, in file order, until they
+    * cover n rows — a `limit(10)` on a 100k-file table launches one task
+    * over one stripe instead of a full wave. Only valid with no predicate
+    * (a filter makes row counts non-authoritative; the builder never
+    * pushes a limit alongside filters, and a runtime filter arriving later
+    * disables the capped plan too).
     */
   private def planLimited(n: Int): Array[InputPartition] = {
     val out = scala.collection.mutable.ArrayBuffer[InputPartition]()
     var acc = 0L
-    val files = MothTable.listFiles(path).iterator
+    val files = fileSet.files.iterator
     while (acc < n && files.hasNext) {
-      val f = files.next()
-      val rd = MothFileReader.fromPathCached(f)
-      try {
-        val stripes = rd.footer.stripes
-        if (stripes.isEmpty) {
-          out += mkSplit(f, 0L, Long.MaxValue)
-          acc += rd.rowCount
-        } else {
-          val it = stripes.iterator
-          while (acc < n && it.hasNext) {
-            val s = it.next()
-            val len = s.indexLength + s.dataLength + s.footerLength
-            out += mkSplit(f, s.offset, s.offset + len)
-            acc += s.numberOfRows
-          }
-        }
-      } finally rd.close()
+      val (splits, rows) = leadingSplits(files.next(), n - acc)
+      out ++= splits
+      acc += rows
     }
     out.toArray
   }
 
-  /** Top-N over the verified sort order: each file's FIRST stripes covering
-    * n rows hold its top-n candidates (files are sorted on the requested
-    * keys), so the candidate wave is |files| small leading reads instead of
-    * the whole table. Spark's final sort+limit merges them.
+  /** One partition per ~128MB of stripes: large files split by stripe
+    * ranges (a stripe belongs to the split owning its first byte —
+    * MothRecordReader.go splitContainsStripe), small files stay whole.
+    * At 100TB this is what fans a few thousand files out to every core.
+    *
+    * Top-N over the verified sort order plans each file's FIRST stripes
+    * covering n rows (files are sorted on the requested keys, so those
+    * stripes hold the file's top-n candidates); Spark's final sort+limit
+    * merges them. Limit probes plan [[planLimited]].
     */
-  private def planTopNPartitions(n: Int): Array[InputPartition] =
-    MothTable.parFiles(path).flatMap { f =>
-      val rd = MothFileReader.fromPathCached(f)
-      try {
-        val stripes = rd.footer.stripes
-        if (stripes.isEmpty) Seq(mkSplit(f, 0L, Long.MaxValue))
-        else {
-          val out = scala.collection.mutable.ArrayBuffer[InputPartition]()
-          var acc = 0L
-          val it = stripes.iterator
-          while (acc < n && it.hasNext) {
-            val s = it.next()
-            val len = s.indexLength + s.dataLength + s.footerLength
-            out += mkSplit(f, s.offset, s.offset + len)
-            acc += s.numberOfRows
-          }
-          out.toSeq
-        }
-      } finally rd.close()
-    }.toArray
-
   override def planInputPartitions(): Array[InputPartition] = {
-    val targetBytes = maxPartitionBytes
     val pred = effectivePredicate
-    topN match {
-      case Some(n) if pred.preds.isEmpty => return planTopNPartitions(n)
-      case _ =>
+    (topN, limit) match {
+      case (Some(n), _) if pred.preds.isEmpty =>
+        fileSet.files.flatMap(leadingSplits(_, n)._1).toArray
+      case (_, Some(n)) if pred.preds.isEmpty => planLimited(n)
+      case _ => fileSet.files.flatMap(f => stripeGroupSplits(f, pred)).toArray
     }
-    limit match {
-      case Some(n) if pred.preds.isEmpty => return planLimited(n)
-      case _ =>
-    }
-    MothTable.parFiles(path).flatMap { f =>
-      val rd = MothFileReader.fromPathCached(f)
-      try {
-        val stripes = rd.footer.stripes
-        // file-level pruning at PLANNING time: a file whose footer stats
-        // refute the predicate never becomes a task (at 100k files this is
-        // the difference between launching and not launching the tasks)
-        if (!pred.matches(rd.columnIdOf, c => rd.fileStats.lift(c), _ => None,
-            rd.trustDoubleStats))
-          Nil
-        else if (stripes.isEmpty) Seq(mkSplit(f, 0L, Long.MaxValue))
-        else {
-          val groups = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-          var start = stripes.head.offset
-          var acc = 0L
-          var end = start
-          stripes.foreach { s =>
-            val len = s.indexLength + s.dataLength + s.footerLength
-            if (acc > 0 && acc + len > targetBytes) {
-              groups += ((start, end))
-              start = s.offset
-              acc = 0
-            }
-            acc += len
-            end = s.offset + len
-          }
-          groups += ((start, Long.MaxValue)) // last split owns the tail
-          groups.map { case (s, e) => mkSplit(f, s, e) }
+  }
+
+  private def stripeGroupSplits(f: MothFile, pred: StatsPredicate): Seq[InputPartition] = {
+    val stripes = f.tail.footer.stripes
+    // file-level pruning at PLANNING time: a file whose footer stats refute
+    // the predicate never becomes a task (at 100k files this is the
+    // difference between launching and not launching the tasks)
+    if (!f.tail.mayMatch(pred)) Nil
+    else if (stripes.isEmpty) Seq(mkSplit(f.path, 0L, Long.MaxValue))
+    else {
+      val groups = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+      var start = stripes.head.offset
+      var acc = 0L
+      var end = start
+      stripes.foreach { s =>
+        val len = stripeLen(s)
+        if (acc > 0 && acc + len > maxPartitionBytes) {
+          groups += ((start, end))
+          start = s.offset
+          acc = 0
         }
-      } finally rd.close()
-    }.toArray
+        acc += len
+        end = s.offset + len
+      }
+      groups += ((start, Long.MaxValue)) // last split owns the tail
+      groups.map { case (s, e) => mkSplit(f.path, s, e) }.toSeq
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -1180,12 +1106,9 @@ class MothScan(path: String, required: StructType, predicate: StatsPredicate,
     * (broadcast-join thresholds at 100TB depend on this).
     */
   override def estimateStatistics(): Statistics = {
-    val perFile = MothTable.parFiles(path).map { f =>
-      val rd = MothFileReader.fromPathCached(f)
-      try (rd.rowCount, rd.footer.contentLength)
-      finally rd.close()
-    }.seq
-    val (r, b) = (perFile.map(_._1).sum, perFile.map(_._2).sum)
+    val files = fileSet.files
+    val (r, b) = (files.map(_.tail.footer.numberOfRows).sum,
+      files.map(_.tail.footer.contentLength).sum)
     new Statistics {
       override def sizeInBytes() = java.util.OptionalLong.of(b)
       override def numRows() = java.util.OptionalLong.of(r)

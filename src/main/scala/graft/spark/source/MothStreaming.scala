@@ -82,12 +82,10 @@ class MothMicroBatchStream(path: String, required: StructType,
     * (the offset log stores names), sizes for byte-capped admission, mtimes
     * for latestFirst ordering. One listing RPC per trigger.
     */
-  private def currentFiles(): Seq[(String, Long, Long)] = {
-    try Sources.listMothSized(path)
+  private def currentFiles(): Seq[(String, Long, Long)] =
+    MothTable.listMothOrEmpty(path)
       .map { case (f, sz, mt) => (new Path(f).getName, sz, mt) }
       .sortBy(_._1)
-    catch { case _: java.io.FileNotFoundException => Nil }
-  }
 
   /** Trigger.AvailableNow end-bound: everything visible at query start. */
   @volatile private var availableNowCap: Option[Set[String]] = None

@@ -7,7 +7,7 @@ import graft.core.file.StatsPredicate
 import graft.spark.source.{MothMicroBatchStream, MothStreamOpts, MothTable}
 
 /** Round-5 ADVICE fixes at the Spark layer: archive-dir true-ancestry
-  * containment, and the memoized parallel commonSortTag probe.
+  * containment, and the commonSortTag agreement check.
   */
 class Round5FixesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -212,17 +212,14 @@ class Round5FixesSpec extends AnyFunSuite with BeforeAndAfterAll {
       "an oversized file must not wedge the query")
   }
 
-  test("commonSortTag: memoized per listing, invalidated when files change") {
+  test("commonSortTag: read from one listing, lost after an untagged append") {
     val dir = tmpDir()
     val df = spark.range(100).selectExpr("id AS k", "cast(id AS string) AS s")
       .coalesce(1).sortWithinPartitions("k")
     df.write.format("moth").option("sortedBy", "k").mode("append").save(dir)
-    assert(MothTable.commonSortTag(dir).contains(Seq("k")))
-    // second probe serves from the memo (same listing)
-    assert(MothTable.commonSortTag(dir).contains(Seq("k")))
-    // a new UNTAGGED file changes the listing: memo must invalidate and the
-    // agreement check must now fail
+    assert(MothTable.commonSortTag(MothTable.listing(dir)).contains(Seq("k")))
+    // a new UNTAGGED file joins the next listing: the agreement check fails
     df.write.format("moth").mode("append").save(dir)
-    assert(MothTable.commonSortTag(dir).isEmpty)
+    assert(MothTable.commonSortTag(MothTable.listing(dir)).isEmpty)
   }
 }

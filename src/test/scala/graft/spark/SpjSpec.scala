@@ -65,7 +65,7 @@ class SpjSpec extends AnyFunSuite with BeforeAndAfterAll {
     MothSpark.writeBucketed(a, s"$warehouse/ta", Seq("k"), 8)
     MothSpark.writeBucketed(b, s"$warehouse/tb", Seq("k"), 8)
     // verified layout round-trips through the footers
-    val bl = MothTable.bucketLayout(s"$warehouse/ta")
+    val bl = MothTable.bucketLayout(MothTable.listing(s"$warehouse/ta"))
     assert(bl.exists(l => l.cols == Seq("k") && l.count == 8), s"layout: $bl")
 
     val joined = spark.table("mothcat.ta").join(spark.table("mothcat.tb"), "k")
@@ -92,7 +92,7 @@ class SpjSpec extends AnyFunSuite with BeforeAndAfterAll {
     val c = facts(3000).withColumnRenamed("v", "u").withColumnRenamed("tag", "tag3")
     // plain (unbucketed) write — no tags, no reported partitioning
     c.write.format("moth").mode("overwrite").save(s"$warehouse/tc")
-    assert(MothTable.bucketLayout(s"$warehouse/tc").isEmpty)
+    assert(MothTable.bucketLayout(MothTable.listing(s"$warehouse/tc")).isEmpty)
     val joined = spark.table("mothcat.ta").join(spark.table("mothcat.tc"), "k")
       .agg(count(lit(1)).as("cnt"), sum(col("v") * col("u")).as("dot"))
     assert(shuffles(joined) > 0, "unbucketed side must shuffle")
@@ -112,7 +112,7 @@ class SpjSpec extends AnyFunSuite with BeforeAndAfterAll {
     MothSpark.writeBucketed(a, s"$warehouse/tsplit", Seq("k"), 4)
     MothSpark.writeBucketed(a, s"$warehouse/tsplit", Seq("k"), 4, saveMode = "append")
     MothSpark.writeBucketed(b, s"$warehouse/tsplit_r", Seq("k"), 4)
-    val layout = MothTable.bucketLayout(s"$warehouse/tsplit")
+    val layout = MothTable.bucketLayout(MothTable.listing(s"$warehouse/tsplit"))
     assert(layout.exists(_.idOf.size == 8), s"expected 8 tagged files, got $layout")
     val joined = spark.table("mothcat.tsplit").as("l")
       .join(spark.table("mothcat.tsplit_r").as("r"), col("l.k") === col("r.k"))
@@ -151,6 +151,27 @@ class SpjSpec extends AnyFunSuite with BeforeAndAfterAll {
     // metadata columns compose with the bucketed scan
     assert(spark.table("mothcat.ta")
       .select(col("_moth_file")).distinct().count() == 8L)
+  }
+
+  test("co-bucketed join planned before an untagged append reads the planned files") {
+    val a = facts(3000)
+    val b = facts(2000).withColumnRenamed("v", "w").withColumnRenamed("tag", "tag2")
+    MothSpark.writeBucketed(a, s"$warehouse/trace_a", Seq("k"), 4)
+    MothSpark.writeBucketed(b, s"$warehouse/trace_b", Seq("k"), 4)
+    def join() = spark.table("mothcat.trace_a").join(spark.table("mothcat.trace_b"), "k")
+      .groupBy("k").agg(count(lit(1)).as("cnt"), sum("v").as("sv"), sum("w").as("sw"))
+    val before = join().collect().map(_.toString).toSeq.sorted
+    val joined = join()
+    joined.queryExecution.optimizedPlan
+    // an UNTAGGED file lands after optimization, before execution: the scan
+    // must neither fail nor mix it into the bucket layout it reported
+    facts(500).write.format("moth").mode("append").save(s"$warehouse/trace_a")
+    val got = joined.collect().map(_.toString).toSeq.sorted
+    val nShuffles = allNodes(joined.queryExecution.executedPlan)
+      .count(_.isInstanceOf[ShuffleExchangeLike])
+    assert(nShuffles == 0,
+      s"join must stay shuffle-free:\n${joined.queryExecution.executedPlan}")
+    assert(got == before)
   }
 
   test("catalog surface: list/exists/drop over warehouse directories") {
@@ -196,7 +217,7 @@ class SpjSpec extends AnyFunSuite with BeforeAndAfterAll {
     // every row of every written file hashes to the file's tagged id
     val rows = spark.read.format("moth").load(s"$warehouse/ta")
       .select(col("k"), col("_moth_file")).collect()
-    val layout = MothTable.bucketLayout(s"$warehouse/ta").get
+    val layout = MothTable.bucketLayout(MothTable.listing(s"$warehouse/ta")).get
     rows.foreach { r =>
       val b = MothBucket.bucketOf(
         MothBucket.hashValue(r.getLong(0), org.apache.spark.sql.types.LongType,
