@@ -156,8 +156,8 @@ object SparkEntry {
         if (rows.isEmpty) Iterator.empty
         else {
           val bos = new java.io.ByteArrayOutputStream()
-          val res = MothSpark.encodeInternalRows(schema, rows, bos,
-            CompressionKind.NONE, WriterOpts())
+          val res = new MothSpark.TaskEncoder(schema, bos, CompressionKind.NONE, WriterOpts())
+            .encode(rows)
           val d0 = res.fileStats(qi).doubleStats
           val i0 = res.fileStats(ki).intStats
           Iterator.single(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
@@ -191,13 +191,11 @@ object SparkEntry {
         if (rows.isEmpty) Iterator.empty
         else {
           val bos = new java.io.ByteArrayOutputStream()
-          MothSpark.encodeInternalRows(schema, rows, bos, CompressionKind.ZLIB,
-            WriterOpts(rowGroupMaxRowCount = 1000))
+          new MothSpark.TaskEncoder(schema, bos, CompressionKind.ZLIB,
+            WriterOpts(rowGroupMaxRowCount = 1000)).encode(rows)
           val rd = MothFileReader.fromBytes(bos.toByteArray)
           val pred = StatsPredicate(Seq(LongRangePred("o_orderkey", Some(1000L), Some(5000L))))
-          val sch = graft.spark.SparkBridge.toSparkSchema(rd.schema)
-          rd.batches(predicate = pred)
-            .flatMap(v => graft.spark.SparkBridge.vecToInternalRows(sch, v))
+          graft.spark.source.MothVector.rows(schema, rd.batches(predicate = pred))
         }
       }
       org.apache.spark.sql.GraftBridge.internalDf(s, rdd, schema)

@@ -92,6 +92,12 @@ object Sources {
     }
   }
 
+  /** Removes a file if it exists (a failed task's tmp output). */
+  def delete(path: String): Unit =
+    if (isLocalPath(path)) java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(localPathOf(new Path(path))))
+    else fileSystemOf(path).delete(new Path(path), false)
+
   def readAllBytes(path: String): Array[Byte] =
     if (isLocalPath(path))
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(localPathOf(new Path(path))))

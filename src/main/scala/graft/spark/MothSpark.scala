@@ -3,11 +3,13 @@ package graft.spark
 import java.io.ByteArrayOutputStream
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 import graft.core.columns.WriterOpts
 import graft.core.compress.CompressionKind
 import graft.core.file._
 import graft.spark.SparkBridge._
+import graft.spark.source.MothVector
 
 /** Spark-facing operators of the engine. All encode/decode work happens
   * inside mapPartitions on executors (SURVEY.md §3.1 re-architecture):
@@ -134,36 +136,54 @@ object MothSpark {
     }
   }
 
-  /** Tungsten-native encode: consumes (reused) InternalRows straight into
-    * columnar batches — the hot path for writeFiles/roundtrip. `onVec` sees
-    * every built batch (used for zero-overhead first/last key tracking).
+  /** One task's InternalRows as one moth file on `out` — the only
+    * row-to-file path (writeFiles, roundtrip, the DSv2 writer). Rows are
+    * batched [[BatchSize]] at a time through [[InternalBridge.VecBuilder]].
+    * With `keyCols`, each built batch updates the first/last key bounds and,
+    * when every key is [[sortTagEligible]], a [[SortChecker]]; close() tags
+    * the footer with [[SortedByKey]] if the rows arrived sorted. The caller
+    * owns `out`: close() flushes it but does not close it.
     */
-  def encodeInternalRows(schema: StructType,
-      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-      out: java.io.OutputStream, compression: CompressionKind.Value,
-      opts: WriterOpts, onVec: ColVecCallback = null,
-      beforeClose: MothFileWriter => Unit = null): FileWriteResult = {
-    val moth = toMothStruct(schema)
-    val w = new MothFileWriter(out, moth, compression, opts)
-    val b = new InternalBridge.VecBuilder(schema, BatchSize)
-    while (rows.hasNext) {
-      b.add(rows.next())
-      if (b.count == BatchSize) {
-        val v = b.build()
-        if (onVec != null) onVec(v)
-        w.write(v)
-      }
-    }
-    if (b.count > 0) {
-      val v = b.build()
-      if (onVec != null) onVec(v)
-      w.write(v)
-    }
-    if (beforeClose != null) beforeClose(w)
-    w.close()
-  }
+  final class TaskEncoder(schema: StructType, out: java.io.OutputStream,
+      compression: CompressionKind.Value, opts: WriterOpts, keyCols: Seq[String] = Nil) {
+    /** The file writer, for metrics and extra footer tags before close(). */
+    val writer = new MothFileWriter(out, toMothStruct(schema), compression, opts)
+    private val batch = new InternalBridge.VecBuilder(schema, BatchSize)
+    private val keyIdx = keyCols.map(schema.fieldIndex).toArray
+    private val checker =
+      if (keyIdx.isEmpty || !keyIdx.forall(i => sortTagEligible(schema(i).dataType))) null
+      else new SortChecker(keyIdx)
+    /** Key columns of the first and last row, as the manifest's "a|b". */
+    var firstKey: Option[String] = None
+    var lastKey: Option[String] = None
 
-  type ColVecCallback = graft.core.columns.ColVec => Unit
+    def add(row: InternalRow): Unit = {
+      batch.add(row)
+      if (batch.count == BatchSize) flush()
+    }
+
+    private def flush(): Unit = {
+      val v = batch.build()
+      if (keyIdx.nonEmpty) {
+        if (firstKey.isEmpty) firstKey = Some(keyOf(keyIdx, v, 0))
+        lastKey = Some(keyOf(keyIdx, v, v.len - 1))
+      }
+      if (checker != null) checker.update(v)
+      writer.write(v)
+    }
+
+    def close(): FileWriteResult = {
+      if (batch.count > 0) flush()
+      if (checker != null && checker.ok) writer.addUserMetadata(SortedByKey, keyCols.mkString(","))
+      writer.close()
+    }
+
+    /** add() every row, then close(). */
+    def encode(rows: Iterator[InternalRow]): FileWriteResult = {
+      while (rows.hasNext) add(rows.next())
+      close()
+    }
+  }
 
   /** Render key columns of one batch row as the manifest's "a|b" string. */
   private def keyOf(keyIdx: Array[Int], v: graft.core.columns.ColVec, row: Int): String = {
@@ -190,9 +210,9 @@ object MothSpark {
     * through the full engine in memory. The correctness oracle for the
     * driver's DuckDB compare (identity SQL).
     *
-    * Decode emits InternalRows directly into a private[sql]
-    * internalCreateDataFrame, so no external String/Timestamp/Row object is
-    * built per cell and no row is re-encoded through a RowEncoder.
+    * Decoded batches reach Spark as the DSv2 scan's [[MothVector]] rows, fed
+    * to a private[sql] internalCreateDataFrame, so no external
+    * String/Timestamp/Row object is built per cell.
     */
   def roundtrip(df: DataFrame,
       compression: CompressionKind.Value = CompressionKind.ZLIB,
@@ -202,10 +222,8 @@ object MothSpark {
       if (rows.isEmpty) Iterator.empty
       else {
         val bos = new ByteArrayOutputStream()
-        encodeInternalRows(schema, rows, bos, compression, opts)
-        val rd = MothFileReader.fromBytes(bos.toByteArray)
-        val sch = toSparkSchema(rd.schema)
-        rd.batches().flatMap(v => vecToInternalRows(sch, v))
+        new TaskEncoder(schema, bos, compression, opts).encode(rows)
+        MothVector.rows(schema, MothFileReader.fromBytes(bos.toByteArray).batches())
       }
     }
     org.apache.spark.sql.GraftBridge.internalDf(df.sparkSession, rdd, schema)
@@ -214,7 +232,8 @@ object MothSpark {
   /** Writes one MOTH file per partition + a manifest JSON carrying lineage
     * (snapshot id, key bounds, stripe offsets/codecs, metrics). Partitions
     * whose manifest already exists and matches the snapshot are skipped —
-    * the north rule's resumable checkpointing.
+    * the north rule's resumable checkpointing. A failing task removes its
+    * tmp file before rethrowing.
     * @return per-partition manifests (read back from disk).
     */
   def writeFiles(df: DataFrame, outDir: String, snapshotId: String,
@@ -223,7 +242,7 @@ object MothSpark {
       firstKeyCols: Seq[String] = Nil): Seq[Manifest] = {
     Sources.mkdirs(outDir)
     val schema = df.schema
-    val keyIdx = firstKeyCols.map(schema.fieldIndex).toArray
+    firstKeyCols.foreach(schema.fieldIndex) // fail on the driver, not per task
     val counts = df.queryExecution.toRdd.mapPartitions { rows =>
       val pid = TaskContext.getPartitionId()
       val mPath = Manifest.path(outDir, pid)
@@ -231,8 +250,7 @@ object MothSpark {
       if (existing.isDefined) {
         // resume: drain without encoding (upstream compute is unavoidable;
         // encode + IO are skipped)
-        var n = 0L
-        while (rows.hasNext) { rows.next(); n += 1 }
+        while (rows.hasNext) rows.next()
         Iterator.single(pid.toLong)
       } else if (!rows.hasNext) {
         Manifest(pid, snapshotId, 0, 0, 0, null, Nil, None, None).write(mPath)
@@ -245,30 +263,19 @@ object MothSpark {
         val attempt = Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
         val tmp = s"$outDir/$file.$attempt.tmp"
         val fos = new java.io.BufferedOutputStream(Sources.createOutput(tmp), 1 << 16)
-        var firstKey: Option[String] = None
-        var lastKey: Option[String] = None
-        // verify-and-tag: if every batch arrives non-decreasing on the key
-        // columns, the footer records the sort order for the scan to report
-        val checker =
-          if (keyIdx.isEmpty || !keyIdx.forall(i => sortTagEligible(schema(i).dataType)))
-            null
-          else new SortChecker(keyIdx)
-        // key bounds read from built batches — zero per-row overhead
-        val onVec: ColVecCallback = if (keyIdx.isEmpty) null else { v =>
-          if (v.len > 0) {
-            if (firstKey.isEmpty) firstKey = Some(keyOf(keyIdx, v, 0))
-            lastKey = Some(keyOf(keyIdx, v, v.len - 1))
-          }
-          if (checker != null) checker.update(v)
+        try {
+          val enc = new TaskEncoder(schema, fos, compression, opts, firstKeyCols)
+          val res = enc.encode(rows)
+          fos.close()
+          Sources.atomicRename(tmp, s"$outDir/$file")
+          Manifest(pid, snapshotId, res.rows, res.stripes.map(_.rawBytes).sum, res.bytes,
+            file, res.stripes, enc.firstKey, enc.lastKey).write(mPath)
+        } catch {
+          case t: Throwable =>
+            try fos.close() catch { case e: Exception => t.addSuppressed(e) }
+            try Sources.delete(tmp) catch { case e: Exception => t.addSuppressed(e) }
+            throw t
         }
-        val res = encodeInternalRows(schema, rows, fos, compression, opts, onVec,
-          beforeClose = w =>
-            if (checker != null && checker.ok)
-              w.addUserMetadata(SortedByKey, firstKeyCols.mkString(",")))
-        fos.close()
-        Sources.atomicRename(tmp, s"$outDir/$file")
-        Manifest(pid, snapshotId, res.rows, res.stripes.map(_.rawBytes).sum, res.bytes,
-          file, res.stripes, firstKey, lastKey).write(mPath)
         Iterator.single(pid.toLong)
       }
     }.collect()

@@ -1,14 +1,18 @@
 package graft.spark.source
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarMap, ColumnVector}
+import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarBatch, ColumnarMap, ColumnVector}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.core.columns.ColVec
 
-/** Zero-copy ColumnVector view over a decoded [[ColVec]] batch — the moth
-  * scan hands Spark whole columnar batches and Catalyst's (codegen'd)
-  * ColumnarToRow does the row materialization only where the plan needs
-  * rows, exactly like the built-in parquet vectorized reader.
+/** Zero-copy ColumnVector view over a decoded [[ColVec]] batch — the only
+  * way decoded values reach Spark. The moth scan hands Spark whole
+  * columnar batches and Catalyst's (codegen'd) ColumnarToRow does the row
+  * materialization only where the plan needs rows, exactly like the
+  * built-in parquet vectorized reader; RDD paths take rows through
+  * [[MothVector.rows]].
   *
   * ColVec stores nested children DENSELY over non-null parent rows while
   * Spark's ColumnarRow/getStruct address children at PARENT row ids, so a
@@ -125,6 +129,22 @@ final class MothVector(dt: DataType, v: ColVec, map: Array[Int] = null)
     if (v.isNull(j)) null
     else new ColumnarMap(childVectors(0), childVectors(1), denseStarts(j), v.lengths(j))
   }
+}
+
+object MothVector {
+  /** Decoded batches as Spark rows, for RDD hand-offs outside the DSv2 scan
+    * (roundtrip, prune_orders): each batch becomes a ColumnarBatch of
+    * MothVectors and rows come from its rowIterator(), which reuses one row
+    * per batch — consumers copy or project (internalDf's RDDScanExec runs
+    * an UnsafeProjection per row).
+    */
+  def rows(schema: StructType, batches: Iterator[ColVec]): Iterator[InternalRow] =
+    batches.flatMap { v =>
+      val cols = schema.fields.zipWithIndex.map { case (f, i) =>
+        new MothVector(f.dataType, v.children(i)): ColumnVector
+      }
+      new ColumnarBatch(cols, v.len).rowIterator().asScala
+    }
 }
 
 /** Constant non-null string vector — serves the `_moth_file` metadata

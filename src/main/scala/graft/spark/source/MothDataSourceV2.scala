@@ -12,8 +12,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.catalyst.InternalRow
 import graft.core.columns.WriterOpts
 import graft.core.compress.CompressionKind
-import graft.core.file.{AndPred, DecimalRangePred, DoubleRangePred, IsNotNullPred, IsNullPred, LongEqPred, LongInPred, LongRangePred, MothFileReader, MothFileWriter, OrPred, ParsedTail, StatsPredicate, StringEqPred, StringInPred, StringRangePred}
-import graft.spark.{InternalBridge, SparkBridge}
+import graft.core.file.{AndPred, DecimalRangePred, DoubleRangePred, IsNotNullPred, IsNullPred, LongEqPred, LongInPred, LongRangePred, MothFileReader, OrPred, ParsedTail, StatsPredicate, StringEqPred, StringInPred, StringRangePred}
+import graft.spark.SparkBridge
 
 /** Merges the Spark session/executor `spark.hadoop.*` settings into the
   * engine's process-wide Hadoop configuration — so s3a credentials etc.
@@ -312,7 +312,10 @@ class MothWrite(path: String, schema: StructType, queryId: String,
           s"moth append schema mismatch: dir has $have, writing $schema")
       }
     }
-    MothDataWriterFactory(path, schema, queryId, codec, sortedBy, bucketBy)
+    // qualified once here, so the executors' create/rename/delete resolve a
+    // scheme-less path to the same FileSystem as mkdirs and the listings
+    MothDataWriterFactory(fs.makeQualified(new Path(path)).toString, schema, queryId,
+      codec, sortedBy, bucketBy)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -351,21 +354,15 @@ class MothDataWriter(path: String, schema: StructType, queryId: String,
     sortedBy: Seq[String] = Nil, bucketBy: Option[(Int, Seq[String])] = None)
     extends DataWriter[InternalRow] {
   import org.apache.hadoop.fs.Path
-  // storage-agnostic output: attempt-private tmp created via the path's
-  // FileSystem, atomically renamed into place at task commit (HDFS rename is
-  // atomic; the local FS maps to File.renameTo)
-  private val fs = graft.core.file.Sources.fileSystemOf(path)
+  import graft.core.file.Sources
+  // attempt-private tmp, published at task commit the way writeFiles
+  // publishes (Sources.atomicRename: an atomic move on local paths)
   private val fileName = f"part-$partitionId%05d-$queryId.moth"
-  private val tmp = new Path(path, s"$fileName.$taskId.tmp")
-  private val fos = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 16)
-  private val writer = new MothFileWriter(fos, SparkBridge.toMothStruct(schema), codec, WriterOpts())
-  private val batch = new InternalBridge.VecBuilder(schema, graft.spark.MothSpark.BatchSize)
-  private val checker = {
-    val idx = sortedBy.filter(schema.fieldNames.contains).map(schema.fieldIndex)
-    if (idx.isEmpty || idx.size != sortedBy.size ||
-        !idx.forall(i => graft.spark.MothSpark.sortTagEligible(schema(i).dataType))) null
-    else new graft.spark.MothSpark.SortChecker(idx.toArray)
-  }
+  private val tmp = new Path(path, s"$fileName.$taskId.tmp").toString
+  private val out = new java.io.BufferedOutputStream(Sources.createOutput(tmp), 1 << 16)
+  // sortedBy naming a missing column leaves the file untagged
+  private val enc = new graft.spark.MothSpark.TaskEncoder(schema, out, codec, WriterOpts(),
+    if (sortedBy.forall(schema.fieldNames.contains)) sortedBy else Nil)
   private val bucketCheck = bucketBy match {
     case Some((n, cols)) if cols.forall(schema.fieldNames.contains) &&
         cols.forall(c => MothBucket.eligible(schema(schema.fieldIndex(c)).dataType)) =>
@@ -374,26 +371,16 @@ class MothDataWriter(path: String, schema: StructType, queryId: String,
     case _ => null
   }
 
-  private def flushBatch(): Unit = {
-    val v = batch.build()
-    if (checker != null) checker.update(v)
-    writer.write(v)
-  }
-
   override def write(row: InternalRow): Unit = {
     if (bucketCheck != null) bucketCheck.update(row)
-    batch.add(row)
-    if (batch.count == graft.spark.MothSpark.BatchSize) flushBatch()
+    enc.add(row)
   }
 
   override def commit(): WriterCommitMessage = {
-    if (batch.count > 0) flushBatch()
-    if (checker != null && checker.ok)
-      writer.addUserMetadata(graft.spark.MothSpark.SortedByKey, sortedBy.mkString(","))
     if (bucketCheck != null && bucketCheck.ok) {
       val (n, cols) = bucketBy.get
-      writer.addUserMetadata(MothBucket.ColsKey, cols.mkString(","))
-      writer.addUserMetadata(MothBucket.CountKey, n.toString)
+      enc.writer.addUserMetadata(MothBucket.ColsKey, cols.mkString(","))
+      enc.writer.addUserMetadata(MothBucket.CountKey, n.toString)
       // an EMPTY file verified vacuously: tag it with the task's partition
       // id — under MothSpark.writeBucketed placement partition id == bucket
       // id, and for foreign placements an empty file's tag constrains
@@ -402,33 +389,29 @@ class MothDataWriter(path: String, schema: StructType, queryId: String,
       // than buckets must not mint a phantom bucket id >= n (the scan would
       // then report a KeyGroupedPartitioning key bucket(n, cols) can never
       // produce).
-      writer.addUserMetadata(MothBucket.IdKey,
+      enc.writer.addUserMetadata(MothBucket.IdKey,
         (if (bucketCheck.observed >= 0) bucketCheck.observed else partitionId % n).toString)
     }
-    writer.close()
-    fos.close()
-    val dst = new Path(path, fileName)
-    // delete-then-rename is non-atomic on non-local schemes (see
-    // Sources.atomicRename): a crash here leaves no dst, and Spark's commit
-    // coordinator re-runs the task — absence is always transient
-    fs.delete(dst, false) // a lost earlier attempt's rename; this attempt won
-    if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"rename $tmp -> $dst failed")
+    enc.close()
+    out.close()
+    // replaces a lost earlier attempt's file: this attempt won the commit
+    Sources.atomicRename(tmp, new Path(path, fileName).toString)
     MothCommit(fileName)
   }
 
   override def abort(): Unit = {
-    try fos.close() catch { case _: Exception => }
-    fs.delete(tmp, false)
+    try out.close() catch { case _: Exception => }
+    Sources.delete(tmp)
   }
   override def close(): Unit = ()
 
   override def currentMetricsValues()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     Array(MothTaskMetric("mothRetainedPeak",
-        math.max(writer.peakRetainedBytes, writer.bufferedBytes)),
+        math.max(enc.writer.peakRetainedBytes, enc.writer.bufferedBytes)),
       // Spark's last metric poll precedes commit() (which flushes the file
       // tail), so count buffered-but-unflushed bytes as produced output
-      MothTaskMetric("mothBytesWritten", writer.bytesWritten + writer.bufferedBytes))
+      MothTaskMetric("mothBytesWritten", enc.writer.bytesWritten + enc.writer.bufferedBytes))
 }
 
 class MothScanBuilder(path: String, fullSchema: StructType,

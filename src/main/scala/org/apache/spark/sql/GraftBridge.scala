@@ -14,8 +14,8 @@ object GraftBridge {
 
   /** DataFrame over an RDD of InternalRows (private[sql] in Spark 4).
     * The engine's decode path produces InternalRows natively
-    * (SparkBridge.vecToInternalRows — the same converters the DSv2 scan
-    * uses); routing them through the public createDataFrame(RDD[Row], ...)
+    * (graft.spark.source.MothVector.rows — the column vectors the DSv2 scan
+    * hands Spark); routing them through the public createDataFrame(RDD[Row], ...)
     * would materialize every value as an external object and re-encode it
     * row by row through a RowEncoder — pure overhead on the identity
     * round-trip hot path (guide §1.2: make the per-task work cheap once the

@@ -110,8 +110,8 @@ class ScanFileSetSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 }
 
-/** [[TestLocalFs]] under the `countfs:` scheme, counting directory listings
-  * and file opens.
+/** [[TestLocalFs]] under the `countfs:` scheme, counting directory listings,
+  * file opens and file creates.
   */
 class CountingLocalFs extends TestLocalFs {
   override def getUri: java.net.URI = java.net.URI.create("countfs:///")
@@ -123,10 +123,17 @@ class CountingLocalFs extends TestLocalFs {
     CountingLocalFs.opens.incrementAndGet()
     super.open(f, bufferSize)
   }
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    CountingLocalFs.creates.incrementAndGet()
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
 }
 
 object CountingLocalFs {
   val listings = new AtomicInteger
   val opens = new AtomicInteger
-  def reset(): Unit = { listings.set(0); opens.set(0) }
+  val creates = new AtomicInteger
+  def reset(): Unit = { listings.set(0); opens.set(0); creates.set(0) }
 }

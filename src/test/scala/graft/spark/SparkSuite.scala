@@ -576,6 +576,21 @@ class SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.format("moth").load(uri).count() == 5010)
   }
 
+  test("DSv2 write of a scheme-less path goes to fs.defaultFS, where the scan lists it") {
+    import graft.core.file.Sources
+    Sources.conf.set("fs.countfs.impl", classOf[CountingLocalFs].getName)
+    val defaultFs = Sources.conf.get("fs.defaultFS")
+    Sources.conf.set("fs.defaultFS", "countfs:///")
+    try {
+      val dir = tmpDir() + "/dfs"
+      CountingLocalFs.reset()
+      spark.range(0, 3000, 1, 3).toDF("id").write.format("moth").mode("overwrite").save(dir)
+      assert(CountingLocalFs.creates.get == 3,
+        s"${CountingLocalFs.creates.get} of 3 task files were created through fs.defaultFS")
+      assert(spark.read.format("moth").load(dir).count() == 3000)
+    } finally Sources.conf.set("fs.defaultFS", defaultFs)
+  }
+
   test("whole-file size parity: default writer <= reference-equivalent writer on transcripts") {
     // The RLE-level gate (RleSpec) proves default <= refCompat per integer
     // stream; this binds the WHOLE layout: same transcripts fixture, same
@@ -590,12 +605,11 @@ class SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     val source = rows.toSeq.map(_.toSeq(schema))
     def encode(opts: WriterOpts): (Long, Seq[Seq[Any]]) = {
       val bos = new java.io.ByteArrayOutputStream()
-      MothSpark.encodeInternalRows(schema, rows.iterator, bos, CompressionKind.ZLIB, opts)
+      new MothSpark.TaskEncoder(schema, bos, CompressionKind.ZLIB, opts).encode(rows.iterator)
       val bytes = bos.toByteArray
       val rd = graft.core.file.MothFileReader.fromBytes(bytes)
-      val decoded = rd.batches()
-        .flatMap(v => SparkBridge.vecToInternalRows(schema, v).map(_.toSeq(schema)))
-        .toSeq
+      val decoded = graft.spark.source.MothVector.rows(schema, rd.batches())
+        .map(_.toSeq(schema)).toSeq
       (bytes.length.toLong, decoded)
     }
     val (defaultBytes, defaultRows) = encode(WriterOpts())
@@ -1033,6 +1047,72 @@ class SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     val b = back.collect()
     assert(a.length == b.length && a.length > 25000)
     a.indices.foreach(i => assert(a(i) == b(i), s"row $i: ${a(i)} vs ${b(i)}"))
+  }
+
+  test("roundtrip hands back every mapped type unchanged, in input order") {
+    // one column per SparkBridge.toMothType case, nulls in each, nested
+    // nulls at every level (null list elements, null struct over a struct)
+    val df = spark.sql(
+      """SELECT id,
+        |  CASE WHEN id % 11 = 0 THEN NULL ELSE id % 3 = 0 END AS bool,
+        |  cast(id % 256 - 128 AS tinyint) AS i8,
+        |  CASE WHEN id % 13 = 0 THEN NULL ELSE cast(id * 7 % 65536 - 32768 AS smallint) END AS i16,
+        |  cast(id * 2654435761 % 4294967296 - 2147483648 AS int) AS i32,
+        |  CASE WHEN id % 5 = 0 THEN NULL ELSE id * 1000003 - 9223372036854 END AS i64,
+        |  cast(id / 7.0 AS float) AS f32,
+        |  CASE WHEN id % 17 = 0 THEN NULL ELSE cast(id AS double) / 3 - 700 END AS f64,
+        |  cast(id / 100.0 - 20 AS decimal(10,2)) AS dec10,
+        |  CASE WHEN id % 19 = 0 THEN NULL ELSE cast(concat(CASE WHEN id % 2 = 0 THEN '-' ELSE '' END,
+        |    cast(id AS string), '1234567890123456789.12345') AS decimal(30,5)) END AS dec30,
+        |  CASE WHEN id % 4 = 0 THEN NULL WHEN id % 4 = 1 THEN '' ELSE concat('s-', id) END AS s,
+        |  CASE WHEN id % 6 = 0 THEN NULL WHEN id % 6 = 1 THEN X'' ELSE unhex(hex(id * 12345)) END AS bin,
+        |  date_add(DATE'1969-12-01', cast(id AS int)) AS dt,
+        |  CASE WHEN id % 23 = 0 THEN NULL ELSE timestamp_micros(1600000000000000 + id * 1000003) END AS ts,
+        |  cast(timestamp_micros(-1000000 + id * 999) AS timestamp_ntz) AS ntz,
+        |  CASE WHEN id % 8 = 0 THEN NULL ELSE
+        |    cast(concat(lpad(cast(id % 24 AS string), 2, '0'), ':',
+        |                lpad(cast(id % 60 AS string), 2, '0'), ':',
+        |                lpad(cast(id % 59 AS string), 2, '0'), '.123456') AS time) END AS tm,
+        |  CASE WHEN id % 10 = 0 THEN NULL
+        |       WHEN id % 10 = 1 THEN array()
+        |       ELSE array(named_struct('k', id, 's', concat('e', id)), NULL,
+        |                  named_struct('k', -id, 's', CAST(NULL AS string))) END AS arr,
+        |  CASE WHEN id % 9 = 0 THEN NULL
+        |       ELSE map(concat('m', id % 3), array(cast(id AS int), NULL),
+        |                'z', cast(array() AS array<int>)) END AS m,
+        |  CASE WHEN id % 7 = 0 THEN NULL
+        |       ELSE named_struct('a', cast(id AS int),
+        |                         'b', CASE WHEN id % 2 = 0 THEN NULL ELSE concat('n', id) END,
+        |                         'in', CASE WHEN id % 3 = 0 THEN NULL ELSE named_struct('x', id) END) END AS st
+        |FROM range(0, 6000, 1, 4)""".stripMargin)
+    val mapped = df.schema.fields.map(_.dataType.typeName).toSet
+    Seq("boolean", "byte", "short", "integer", "long", "float", "double", "decimal(10,2)",
+        "decimal(30,5)", "string", "binary", "date", "timestamp", "timestamp_ntz", "array",
+        "map", "struct").foreach(t => assert(mapped(t), s"fixture lacks $t: ${df.schema}"))
+    assert(mapped.exists(_.startsWith("time(")), s"fixture lacks TIME: ${df.schema}")
+    val back = MothSpark.roundtrip(df)
+    assert(back.rdd.getNumPartitions == 4)
+    // decoded rows reach Spark through RDDScanExec, whose per-row
+    // UnsafeProjection copies each (possibly reused) row
+    assert(back.queryExecution.executedPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.RDDScanExec => s
+    }.isDefined, back.queryExecution.executedPlan.toString)
+    val a = df.collect()
+    val b = back.collect()
+    assert(a.length == 6000 && b.length == a.length)
+    a.indices.foreach(i => assert(a(i) == b(i), s"row $i: ${a(i)} vs ${b(i)}"))
+  }
+
+  test("writeFiles: a task failing mid-partition leaves no tmp file behind") {
+    val out = tmpDir()
+    // one partition: the only task is the failing one
+    val df = spark.range(0, 1000, 1, 1).select(col("id"),
+      when(col("id") < 900, col("id") * 3).otherwise(raise_error(lit("row 900"))).as("v"))
+    val e = intercept[Exception](MothSpark.writeFiles(df, out, "debris"))
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("row 900")), e.toString)
+    val left = new java.io.File(out).list().filter(_.endsWith(".tmp"))
+    assert(left.isEmpty, s"task debris: ${left.mkString(", ")}")
   }
 
   test("manifest round-trip: keys with tab, newline, quote, backslash and non-ASCII") {
